@@ -2,14 +2,15 @@
 """Benchmark harness.
 
 Default mode: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+``SF_DIR`` below, an sf0.1 dataset) on local[session.cpu_count()] and
+prints ONE JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+The ``kg_pipeline`` line times the production batch job:
+run_pipeline -> pipeline_counters -> cleanup.
 
---scaling mode: runs the same KG-pipeline job at two parallelism levels
-(local[8] vs local[32]) in fresh JVMs on the SAME input and reports
-throughput at both plus scaling efficiency = T8/(4*T32)... see
-BENCH.md. (Sandbox stand-in for the N -> 4N executor gate in
-BASELINE.json — no real cluster here.)
+--scaling mode: runs the same KG job at two parallelism levels,
+local[max(1, c // 4)] and local[c] with c = session.cpu_count(), in fresh
+JVMs on the SAME input, and reports throughput at both plus scaling
+efficiency = (T_lo / T_hi) / (hi / lo); see BENCH.md.
 """
 
 from __future__ import annotations
@@ -21,8 +22,10 @@ import subprocess
 import sys
 import time
 
+from ner_app_spark.session import cpu_count
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = cpu_count()
 PAGES_PER_SF = 20_000  # sf0.1 -> 2000 synthetic pages for the KG job
 
 
@@ -37,79 +40,18 @@ def _force(df) -> int:
     return 0
 
 
-def _sink_dir() -> str:
-    """Scratch dir for the kg job's materialized fused table (tmpfs-gated
-    via the shared session.scratch_base helper). On a real cluster this is
-    the Iceberg warehouse."""
-    from ner_app_spark.session import scratch_base
+def kg_job(spark, n_pages: int, n_parts: int) -> dict:
+    """The production KG job over ``n_pages`` synthetic pages, without
+    the graph-table writes: run_pipeline -> pipeline_counters -> cleanup.
+    Returns pipeline_counters' counts."""
+    from ner_app_spark.plans.pipeline import pipeline_counters, run_pipeline
+    from ner_app_spark.sources.pages import synth_pages_df
 
-    return os.path.join(scratch_base(), f"ner_app_spark_bench_sink_{os.getpid()}")
-
-
-def kg_pipeline_counts(spark, n_pages: int, n_parts: int | None = None) -> dict:
-    """The headline job: synth pages -> fused extract (phrases AND triples
-    emitted in the SAME Arrow batch — triples are per-doc local, so fusing
-    deletes the posexplode/window shuffle that dominated earlier rounds)
-    -> materialize the fused table to a parquet sink -> links from the
-    sink. Returns counts + per-stage walls for throughput math.
-
-    Round-3 shape change (documented in BENCH.md): the fused frame is
-    written to parquet and read back rather than `.cache()`-ed. This is
-    the north-star shape (nodes/edges materialize to a table, not to
-    executor heap) AND the scalable one on this box — the 11M-row
-    deserialized cache write was DRAM-bandwidth-bound and anti-scaled
-    past ~8 threads, while the parquet encode is CPU-bound and speeds up
-    with added cores (measured 26.6 s -> 17.5 s going 8 -> 32 at 20k
-    pages vs the cache's inversion).
-
-    Stage walls: 'extract' runs the full fused compute + sink write,
-    'triples' the per-kind counts from the sink, 'links' the linking
-    join tree over the sink's phrase rows."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ner_app_spark.operators.extract import (
-        extract_phrases_and_triples,
-        fused_phrases,
-    )
-    from ner_app_spark.operators.linking import link_mentions
-    from ner_app_spark.sources.pages import alias_dict_df, synth_pages_df
-
-    n_parts = n_parts or CPUS * 2
-    out = _sink_dir()
+    out = run_pipeline(spark, synth_pages_df(spark, n_pages), n_parts=n_parts)
     try:
-        t0 = time.monotonic()
-        pages = synth_pages_df(spark, n_pages)
-        fused = extract_phrases_and_triples(pages, num_partitions=n_parts)
-        fused.write.mode("overwrite").parquet(out)
-        t1 = time.monotonic()
-        back = spark.read.parquet(out)
-        counts = {
-            r["kind"]: r["n"]
-            for r in back.groupBy("kind").agg(F.count("*").alias("n")).collect()
-        }
-        n_phrases = int(counts.get("phrase", 0))
-        n_triples = int(counts.get("triple", 0))
-        t2 = time.monotonic()
-        n_links = link_mentions(fused_phrases(back), alias_dict_df(spark)).count()
-        t3 = time.monotonic()
+        return pipeline_counters(out)
     finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return {
-        "docs": n_pages,
-        "phrases": n_phrases,
-        "triples": n_triples,
-        "links": n_links,
-        "stage_sec": {
-            # 'extract' = fused compute + parquet sink write (inseparable
-            # without recomputing); 'triples' = per-kind counts from the
-            # sink; 'links' = the linking join tree over the sink
-            "extract_sink": round(t1 - t0, 3),
-            "triples": round(t2 - t1, 3),
-            "links": round(t3 - t2, 3),
-        },
-    }
+        out.cleanup()
 
 
 #: min-of-N per headline line: this host is a shared VM with bursty
@@ -132,7 +74,7 @@ def run_bench() -> dict:
     # untimed warmup: a ~100-page pipeline pass so trial 1 does not pay
     # Python-worker spin-up / codegen classloading (round-2 VERDICT #3 —
     # the driver's first trial was timing cold workers, not the job)
-    kg_pipeline_counts(spark, 100)
+    kg_job(spark, 100, CPUS * 2)
     # the flagship gets 3 trials (min-of-3) unless quick mode (TRIALS=1)
     kg_trials = int(
         os.environ.get("SPARK_GRAFT_KG_TRIALS", "3" if BENCH_TRIALS > 1 else "1")
@@ -140,7 +82,7 @@ def run_bench() -> dict:
     kg_walls = []
     for _ in range(kg_trials):
         t0 = time.monotonic()
-        counts = kg_pipeline_counts(spark, n_pages)
+        counts = kg_job(spark, n_pages, CPUS * 2)
         kg_walls.append(round(time.monotonic() - t0, 3))
     timings["kg_pipeline"] = min(kg_walls)
 
@@ -352,7 +294,7 @@ def run_bench() -> dict:
         "sf": sf,
         "trials": BENCH_TRIALS,
         "kg_counts": counts,
-        "kg_docs_per_sec": round(counts["docs"] / timings["kg_pipeline"], 2),
+        "kg_docs_per_sec": round(counts["documents"] / timings["kg_pipeline"], 2),
         "kg_triples_per_sec": round(counts["triples"] / timings["kg_pipeline"], 2),
         "extra_queries": extras,
         "cpus": CPUS,
@@ -362,86 +304,42 @@ def run_bench() -> dict:
 
 
 def run_scaling_child(cores: int, n_pages: int, stage: str = "all") -> dict:
-    """One fresh-JVM measurement at local[cores]. stage='all' = the full
-    KG job; stage='extract' = the mapInPandas extract stage only (the
-    compute-dominant fraction — on a real multi-executor cluster every
-    stage ships with its own DRAM/NIC, but on THIS single-box VM the
-    shuffle stages sit on a shared-DRAM ceiling and anti-scale past ~8
-    threads (BENCH.md §1 platform probes), so the extract-only number is
-    the honest proxy for how added executors scale the job)."""
+    """One fresh-JVM measurement at local[cores]. stage='all' = the KG
+    job (kg_job); stage='extract' = the mapInPandas extract stage only,
+    the compute-dominant fraction."""
+    from ner_app_spark.operators.extract import extract_phrases
     from ner_app_spark.session import get_session
+    from ner_app_spark.sources.pages import synth_pages_df
 
     spark = get_session(
         app_name=f"scaling-{cores}",
         master=f"local[{cores}]",
         shuffle_partitions=cores * 2,
     )
-    # Untimed warmup (same methodology as the headline bench, round-2
-    # VERDICT #3): a ~200-page pass of the identical job shape absorbs the
-    # one-time per-JVM costs — Python-worker spin-up, codegen/JIT compile
-    # of the ~15-stage linking plan, broadcast machinery. Measured: the
-    # FIRST linking execution in a fresh JVM costs 50-75 s at local[32]
-    # vs ~3-9 s for every subsequent one (driver-side single-threaded
-    # compile gaps, starved by 32 busy task threads under neighbor
-    # noise); the N->4N gate is about throughput, which a 10^12-doc job
-    # amortizes cold-start into nothing.
+    # Untimed warmup (same methodology as the headline bench): a 200-page
+    # pass of the identical job shape absorbs the one-time per-JVM costs
+    # — Python-worker spin-up, codegen/JIT compile, broadcast machinery.
     if stage == "extract":
-        from ner_app_spark.operators.extract import extract_phrases
-        from ner_app_spark.sources.pages import synth_pages_df
-
         extract_phrases(synth_pages_df(spark, 200), num_partitions=cores).count()
     else:
-        kg_pipeline_counts(spark, 200, n_parts=cores)
+        kg_job(spark, 200, cores)
     t0 = time.monotonic()
     if stage == "extract":
-        from ner_app_spark.operators.extract import extract_phrases
-        from ner_app_spark.sources.pages import synth_pages_df
-
         n_phrases = extract_phrases(
             synth_pages_df(spark, n_pages), num_partitions=cores * 2
         ).count()
-        counts: dict = {"docs": n_pages, "phrases": n_phrases}
+        counts: dict = {"documents": n_pages, "phrases": n_phrases}
     else:
-        counts = kg_pipeline_counts(spark, n_pages, n_parts=cores * 2)
+        counts = kg_job(spark, n_pages, cores * 2)
     wall = time.monotonic() - t0
     spark.stop()
     return {"cores": cores, "wall_sec": round(wall, 3), **counts}
 
 
-def measure_host_grant(seconds: float = 8.0) -> float:
-    """Measured parallel speedup this host ACTUALLY grants going 8 -> 32
-    busy processes (ideal: 4.0). Pure-Python ALU spin in separate
-    processes — no JVM, no shared-DRAM traffic, no GIL contention — so
-    the number isolates the hypervisor/neighbor CPU grant from every
-    memory-system effect the KG job adds. `lscpu` advertises 32 dedicated
-    cores; the round-1 probe measured ~3.32x under neighbor load. Run in
-    the SAME window as the scaling job, this turns 'efficiency vs the
-    grant' from a cross-day citation into same-window data carried in the
-    scaling JSON."""
-    import multiprocessing as mp
-
-    def burn(q):
-        t0 = time.monotonic()
-        n = 0
-        while time.monotonic() - t0 < seconds:
-            n += 1
-        q.put(n)
-
-    agg: dict[int, int] = {}
-    for procs in (8, 32):
-        q: mp.Queue = mp.Queue()
-        ps = [mp.Process(target=burn, args=(q,)) for _ in range(procs)]
-        for p in ps:
-            p.start()
-        agg[procs] = sum(q.get() for _ in ps)
-        for p in ps:
-            p.join()
-    return agg[32] / agg[8]
-
-
 def run_scaling() -> dict:
-    """Same job, same input, local[8] vs local[32]; efficiency =
-    (T_8 / T_32) / 4 — the sandbox evidence for the N->4N gate.
+    """Same job, same input, local[lo] vs local[hi] with
+    (lo, hi) = (max(1, c // 4), c), c = session.cpu_count();
+    efficiency = (T_lo / T_hi) / (hi / lo).
 
     Two methodology notes (both reported in the output):
       * The scaling input is larger than the headline-bench input
@@ -451,23 +349,22 @@ def run_scaling() -> dict:
         spin-up, per-stage scheduling) dominate and no parallelism level
         can show speedup (Amdahl).
       * Each level runs `trials` times and the MINIMUM wall is used:
-        this sandbox is a VM on a shared host with bursty neighbor load
-        (measured steal/latency varying 10x across minutes); min-of-N
-        estimates machine capability rather than neighbor noise.
+        min-of-N estimates machine capability rather than neighbor noise.
     """
     sf = _sf()
     n_pages = int(os.environ.get("SPARK_GRAFT_SCALING_PAGES", max(2000, int(400_000 * sf))))
     trials = int(os.environ.get("SPARK_GRAFT_SCALING_TRIALS", "2"))
+    lo, hi = max(1, CPUS // 4), CPUS
 
     def measure(stage: str, pages: int) -> dict[int, dict]:
-        # Levels INTERLEAVED within each trial round (8,32,8,32...), not
-        # blocked per level: a neighbor burst that spans one level's whole
-        # block corrupts both its trials and min-of-N cannot recover the
-        # comparison; interleaved, a burst hits one trial of EACH level
-        # and the min at both levels comes from the same quiet window.
-        runs: dict[int, list] = {8: [], 32: []}
+        # Levels INTERLEAVED within each trial round (lo, hi, lo, hi...),
+        # not blocked per level: a neighbor burst that spans one level's
+        # whole block corrupts both its trials and min-of-N cannot recover
+        # the comparison; interleaved, a burst hits one trial of EACH
+        # level and the min at both levels comes from the same quiet window.
+        runs: dict[int, list] = {lo: [], hi: []}
         for _ in range(trials):
-            for cores in (8, 32):
+            for cores in (lo, hi):
                 out = subprocess.run(
                     [
                         sys.executable, __file__, "--scaling-child",
@@ -487,63 +384,29 @@ def run_scaling() -> dict:
 
     results = measure("all", n_pages)
     extract = measure("extract", n_pages)
-    t8, t32 = results[8]["wall_sec"], results[32]["wall_sec"]
-    e8, e32 = extract[8]["wall_sec"], extract[32]["wall_sec"]
-    docs = results[32]["docs"]
-    # Per-stage decomposition at BOTH parallelism levels (round-3 VERDICT
-    # #2: the "compute fraction scales, the residual is single-box DRAM"
-    # argument as machine-checkable data, not prose). Stage walls come
-    # from the min-wall full-job run at each level, so each level's
-    # decomposition is internally consistent.
-    stage8 = results[8].get("stage_sec", {})
-    stage32 = results[32].get("stage_sec", {})
-    per_stage_eff = {
-        k: round((stage8[k] / stage32[k]) / 4.0, 4)
-        for k in stage32
-        if stage8.get(k) and stage32.get(k)
-    }
-    # The extract_sink stage is fused-compute + parquet-sink write; the
-    # extract-only job is the same compute WITHOUT the sink. Their
-    # difference isolates the sink-write residual per level — the
-    # single-box DRAM term the full-job efficiency divides by. (On a
-    # multi-executor cluster each executor brings its own DRAM/NIC, so
-    # this residual scales with the cluster rather than sitting on one
-    # memory bus.)
-    sink8 = round(stage8.get("extract_sink", 0) - e8, 3)
-    sink32 = round(stage32.get("extract_sink", 0) - e32, 3)
-    # Same-window physical grant: the efficiency denominators above use
-    # the ideal 4.0; a shared host grants less CPU than it advertises,
-    # and the *_vs_grant fields report the job's speedup against what the
-    # hypervisor measurably granted THIS window (burn test, no JVM/DRAM).
-    grant = measure_host_grant()
+    t_lo, t_hi = results[lo]["wall_sec"], results[hi]["wall_sec"]
+    e_lo, e_hi = extract[lo]["wall_sec"], extract[hi]["wall_sec"]
     return {
-        "metric": "scaling_efficiency_8_to_32_cores",
-        "value": round((t8 / t32) / 4.0, 4),
-        "extract_only_efficiency": round((e8 / e32) / 4.0, 4),
-        "stage_sec_8": stage8,
-        "stage_sec_32": stage32,
-        "per_stage_efficiency": per_stage_eff,
-        "derived_sink_write_sec": {"8": sink8, "32": sink32},
-        "host_grant_8_to_32": round(grant, 3),
-        "full_eff_vs_grant": round((t8 / t32) / grant, 4),
-        "extract_eff_vs_grant": round((e8 / e32) / grant, 4),
+        "metric": "scaling_efficiency",
+        "value": round((t_lo / t_hi) / (hi / lo), 4),
+        "extract_only_efficiency": round((e_lo / e_hi) / (hi / lo), 4),
         "unit": "efficiency",
+        "levels": [lo, hi],
         "sf": sf,
         "scaling_pages": n_pages,
         "trials": trials,
         "method": (
-            "min-of-N wall per level (shared-host noise); full job + "
-            "extract-only (compute fraction — the shuffle stages sit on this "
-            "single box's shared-DRAM ceiling and anti-scale past ~8 threads, "
-            "see BENCH.md platform probes; multi-executor clusters add "
-            "DRAM/NIC per executor)"
+            "min-of-N wall per level, levels interleaved; full KG job "
+            "(run_pipeline -> pipeline_counters) + extract-only"
         ),
         "runs": results,
         "extract_runs": extract,
-        "docs_per_sec_8": round(docs / t8, 2),
-        "docs_per_sec_32": round(docs / t32, 2),
-        "extract_docs_per_sec_8": round(docs / e8, 2),
-        "extract_docs_per_sec_32": round(docs / e32, 2),
+        "docs_per_sec": {
+            str(lo): round(n_pages / t_lo, 2), str(hi): round(n_pages / t_hi, 2)
+        },
+        "extract_docs_per_sec": {
+            str(lo): round(n_pages / e_lo, 2), str(hi): round(n_pages / e_hi, 2)
+        },
     }
 
 

@@ -6,9 +6,9 @@ Replaces the reference's transitive merge-by-natural-key
 (/root/reference/src/services/dictionary_service.py:158-241): phrases /
 aliases linked to the same entity collapse into one canonical id.
 
-No GraphFrames jar in the sandbox (and none needed): each round is two
-groupBy+join stages; ``localCheckpoint`` truncates the lineage so plans
-stay flat across iterations. Node ids are int64 (callers hash string
+No GraphFrames jar needed: each round is two groupBy+join stages, and
+plans/checkpoint.persister truncates the lineage so plans stay flat
+across iterations. Node ids are int64 (callers hash string
 keys with xxhash64; at 10^12 nodes expect ~a handful of 64-bit
 collisions — acceptable for canonicalization, or swap in a minted-id
 dimension if not).
@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..plans.checkpoint import persister
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -73,39 +75,22 @@ def connected_components(
     component is the minimum node id of the component. Nodes that appear
     in no edge are the caller's concern (left-join + coalesce).
 
-    Lineage truncation per round (plans otherwise double in depth and the
-    optimizer wall explodes) has two modes — round-3 VERDICT #6:
-      * default: ``localCheckpoint`` — blocks live on executors; right
-        for local mode and fastest, but an executor loss mid-run kills
-        the job (trade-off documented in PLANS.md §failure-tolerance);
-      * ``workdir``: every round goes through the manifest-backed
-        per-partition checkpoint (plans/checkpoint.py) — a killed job
-        re-invoked with the same workdir resumes from the last published
-        round, recomputing only rounds whose manifest never committed
-        (kill-mid-iteration test: tests/test_checkpoint_resume.py).
+    Lineage is truncated every round (plans otherwise double in depth and
+    the optimizer wall explodes) through plans/checkpoint.persister:
+    ``localCheckpoint`` by default, or with ``workdir`` the
+    manifest-backed per-partition checkpoint, resumable from the last
+    published round (trade-off documented in PLANS.md
+    §failure-tolerance).
     """
-    if workdir:
-        from ..plans.checkpoint import CheckpointManager
-
-        ckpt = CheckpointManager(workdir, n_parts=n_parts)
-
-        def persist(df: DataFrame, name: str) -> DataFrame:
-            out, m = ckpt.run_stage(df.sparkSession, name, df, key="src")
-            if metrics_out is not None:
-                metrics_out.append(m)
-            return out.drop("part_id")
-    else:
-
-        def persist(df: DataFrame, name: str) -> DataFrame:
-            return df.localCheckpoint()
-
+    persist = persister(workdir, n_parts, metrics_out)
     e = persist(
         edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct(),
         "cc_init",
+        "src",
     )
     prev = _fingerprint(e)
     for i in range(max_iter):
-        e = persist(_small_star(_large_star(e)), f"cc_round_{i:02d}")
+        e = persist(_small_star(_large_star(e)), f"cc_round_{i:02d}", "src")
         cur = _fingerprint(e)
         if cur == prev:
             break

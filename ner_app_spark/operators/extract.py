@@ -124,14 +124,11 @@ def _analyze_fused_batches(batches) -> Iterator:
     Triple emission is per-document local (both §2.28 rule families group
     within one url — the vendored oracle computes them in plain Python per
     doc, ner_app_spark/oracle.py triples_for_doc), so computing triples in
-    the SAME Arrow batch as the phrases deletes the pipeline's dominant
-    shuffle: the declarative formulation (operators/triples.py) explodes
-    phrases to words and re-aggregates through windows keyed on
-    (url, phrase) — a full shuffle of ~10x the phrase volume that
-    anti-scales on shuffle-bound hosts. operators/triples.emit_triples
-    stays as the independent declarative variant; the kg_triples registry
-    self-check and tests/test_fused.py pin that both emit the identical
-    triple set."""
+    the SAME Arrow batch as the phrases needs no shuffle at all: a
+    declarative formulation would explode phrases to words and
+    re-aggregate through windows keyed on (url, phrase) — a full shuffle
+    of ~10x the phrase volume. The kg_triples registry row hash-checks
+    this path against an independent DuckDB replay."""
     import pandas as pd
 
     from ..oracle import analyze, triples_for_doc

@@ -24,8 +24,10 @@ oracle reproduces every output value EXACTLY:
   neighbor-pair join does.
 * **BFS** propagates a frontier (newly-reached nodes only), not the full
   distance table, so iteration i shuffles O(|frontier_i|) rows.
-* Iterative lineage is truncated per round (``localCheckpoint``) exactly
-  like operators/components.py — plans otherwise double in depth.
+* Iterative lineage is truncated per round through the same
+  plans/checkpoint.persister operators/components.py uses —
+  ``localCheckpoint`` by default, the manifest-backed checkpoint with
+  ``workdir``.
 
 Node ids are strings here (entity tokens); at 10^12 scale mint int64 ids
 first (xxhash64 or an id dimension) — string shuffle keys cost ~3x.
@@ -35,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..plans.checkpoint import persister
 
 #: default fixed-point scale for integer PageRank: rank 1.0 == 10^12.
 #: Mass analysis (why this is int64-safe at ANY node count): ranks sum
@@ -59,33 +63,6 @@ def _derive_pr_scale(n: int) -> int:
     while 10**k < 10**6 * n and 85 * 10 ** (k + 1) < (1 << 63):
         k += 1
     return 10**k
-
-
-def _persister(workdir: str | None, n_parts: int = 16, metrics_out: list | None = None):
-    """Lineage-truncation strategy shared by the iterative algorithms
-    (same two modes as operators/components.connected_components):
-    default ``localCheckpoint`` (fastest, executor-resident — an
-    executor loss kills the job), or ``workdir`` = every round routed
-    through the manifest-backed per-partition checkpoint
-    (plans/checkpoint.py) so a killed job re-invoked with the same
-    workdir resumes from the last published round."""
-    if workdir:
-        from ..plans.checkpoint import CheckpointManager
-
-        ckpt = CheckpointManager(workdir, n_parts=n_parts)
-
-        def persist(df: DataFrame, name: str, key: str) -> DataFrame:
-            out, m = ckpt.run_stage(df.sparkSession, name, df, key=key)
-            if metrics_out is not None:
-                metrics_out.append(m)
-            return out.drop("part_id")
-
-    else:
-
-        def persist(df: DataFrame, name: str, key: str) -> DataFrame:
-            return df.localCheckpoint()
-
-    return persist
 
 
 def cooccurrence_edges(docs: DataFrame, window: int = 2) -> DataFrame:
@@ -199,7 +176,7 @@ def pagerank(
     replay (oracles._pagerank_sql(directed=True)) so the row stays
     hash-verifiable.
     """
-    persist = _persister(workdir, n_parts, metrics_out)
+    persist = persister(workdir, n_parts, metrics_out)
     # one materialization of the (bidirectional | deduped directed) edge
     # list; degree, the pre-joined edge input, and the node dimension all
     # derive from it (round-4 ADVICE: nodes/deg must not re-plan the
@@ -234,7 +211,12 @@ def pagerank(
             f"pagerank scale {scale} overflows int64 in the 85*rank intermediate"
         )
     base = (15 * scale) // (100 * n)
-    ranks = nodes.select("node", F.lit(scale // n).alias("rank_scaled"))
+    # long literal: scale // n can fit int32 (466 <= n < 39,582 at the
+    # default scale), and an int rank_scaled overflows 85 * rank_scaled
+    # under ANSI
+    ranks = nodes.select(
+        "node", F.lit(scale // n).cast("long").alias("rank_scaled")
+    )
     for i in range(iters):
         contrib = (
             ed.join(ranks, ed["src"] == ranks["node"])
@@ -339,7 +321,7 @@ def bfs_hops(
     pagerank/connected_components): a killed job resumes with committed
     rounds replayed at zero recompute.
     """
-    persist = _persister(workdir, n_parts, metrics_out)
+    persist = persister(workdir, n_parts, metrics_out)
     bidir = persist(_bidir(edges), "bfs_bidir", "src")
     nodes = bidir.select(F.col("src").alias("node")).distinct()
     seed_row = bidir.agg(F.min("src").alias("node"))
@@ -481,10 +463,10 @@ def label_propagation(
     on src), one partial-aggregated groupBy (node, lbl) — head labels
     pre-combine map-side, so a label spanning 10^9 members costs one
     row per (task, node) not per edge — and one node-PARTITIONED
-    row_number (never a global window). Lineage truncates through the
-    shared persister: default localCheckpoint, or ``workdir`` for the
-    manifest-backed resumable checkpoint (same contract as pagerank /
-    connected_components).
+    row_number (never a global window). Lineage truncates through
+    plans/checkpoint.persister: default localCheckpoint, or ``workdir``
+    for the manifest-backed resumable checkpoint (same contract as
+    pagerank / connected_components).
 
     Reference scope: the reference materializes the dictionary graph
     without any community layer (/root/reference/src/services/
@@ -493,7 +475,7 @@ def label_propagation(
     """
     from pyspark.sql.window import Window
 
-    persist = _persister(workdir, n_parts, metrics_out)
+    persist = persister(workdir, n_parts, metrics_out)
     bid = persist(_bidir(edges), "lpa_bidir", "src")
     labels = (
         bid.select(F.col("src").alias("node"))

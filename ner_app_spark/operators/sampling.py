@@ -167,8 +167,16 @@ def edge_split(triples: DataFrame) -> DataFrame:
     of re-running the upstream extraction lineage. No windows, no
     driver collect. The DuckDB oracle (oracles._kg_edge_split_sql)
     replays bucket arithmetic and repair rule bit-exactly.
+
+    Rows with a NULL ``subj``, ``pred`` or ``obj`` are dropped at entry:
+    they are not triples, and their key has no portable hash (Spark's
+    ``concat_ws`` skips NULLs while the oracle's ``||`` propagates them).
     """
-    pos = triples.select("subj", "pred", "obj").distinct()
+    pos = (
+        triples.select("subj", "pred", "obj")
+        .dropna(subset=["subj", "pred", "obj"])
+        .distinct()
+    )
     h = _md5_u32_le(F.concat_ws("\x1f", "subj", "pred", "obj"))
     prov = pos.select(
         "subj",

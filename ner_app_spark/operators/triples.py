@@ -1,109 +1,29 @@
-"""Triple emission (SURVEY.md §2.28): phrases -> (url, subj, pred, obj).
+"""Corpus-level operators over the emitted triple table
+(url, subj, pred, obj).
 
-Two rule families, both deterministic and pinned by the oracle goldens:
+Emission itself (SURVEY.md §2.28) is per-document local and runs inside
+the fused extract stage: ``extract.extract_phrases_and_triples`` calls
+``oracle.triples_for_doc`` in the same Arrow batch that emits the
+phrases, and ``extract.fused_triples`` splits the triple rows out. The
+two rule families, both deterministic and pinned by the oracle goldens:
   1. Intra-phrase dependency-pattern relations: the rightmost-NOUN word is
-     the head (/root/reference/src/analysis/phrase_extractor.py:73-83
+     the head (the reference's src/analysis/phrase_extractor.py:73-83
      head-noun rule); every other word emits
      (head_noun, pattern_type, word).
   2. Synonym chains: distinct phrases sharing a head noun within a doc,
      sorted, consecutive pairs emit (a, 'synonym', b) — the reference's
      term<->term connection labeling (templates/search.html.jinja).
 
-Plan shape: posexplode + broadcast morphology join (map-side, no
-shuffle) -> window keyed by (url, phrase) / (url, head_noun). With the
-extract stage already hash-partitioned on url, these windows cluster on
-a superset of the existing keys, so Catalyst needs only local sorts —
-no extra full shuffle at 100 TB.
+Plan shape: emission adds no exchange of its own — the fused stage's
+one url-hash repartition is the only shuffle before these operators
+(tests/test_plans.py). The emitted table holds exactly one row per
+(url, subj, pred, obj): triples_for_doc de-duplicates within a doc.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _with_pos(df: DataFrame, morph: DataFrame, word_col: str) -> DataFrame:
-    """Attach OpenCorpora POS for a lemma word column; hyphenated
-    compounds fall back to their last part (provider contract,
-    ner_app_spark.morphology.pos_of)."""
-    direct = morph.select(
-        F.col("surface").alias("__w"), F.col("pos").alias("__pos_direct")
-    )
-    last = morph.select(
-        F.col("surface").alias("__wl"), F.col("pos").alias("__pos_last")
-    )
-    out = (
-        df.join(F.broadcast(direct), F.col(word_col) == F.col("__w"), "left")
-        .withColumn("__last_part", F.element_at(F.split(F.col(word_col), "-"), -1))
-        .join(
-            F.broadcast(last),
-            (F.col("__pos_direct").isNull())
-            & F.col(word_col).contains("-")
-            & (F.col("__last_part") == F.col("__wl")),
-            "left",
-        )
-        .withColumn("pos_tag", F.coalesce("__pos_direct", "__pos_last"))
-        .drop("__w", "__wl", "__last_part", "__pos_direct", "__pos_last")
-    )
-    return out
-
-
-def intra_phrase_triples(phrases: DataFrame, morph: DataFrame) -> DataFrame:
-    multi = phrases.filter((F.col("length") >= 2) & (F.col("head_noun") != "")).select(
-        "url",
-        "phrase",
-        "type",
-        "head_noun",
-        F.posexplode(F.split("phrase", " ")).alias("widx", "word"),
-    )
-    tagged = _with_pos(multi, morph, "word")
-    w = Window.partitionBy("url", "phrase")
-    tagged = tagged.withColumn(
-        "head_idx",
-        F.max(F.when(F.col("pos_tag") == "NOUN", F.col("widx"))).over(w),
-    )
-    return (
-        tagged.filter(F.col("widx") != F.col("head_idx"))
-        .select(
-            "url",
-            F.col("head_noun").alias("subj"),
-            F.col("type").alias("pred"),
-            F.col("word").alias("obj"),
-        )
-        .distinct()
-    )
-
-
-def synonym_triples(phrases: DataFrame) -> DataFrame:
-    heads = (
-        phrases.filter(F.col("head_noun") != "")
-        .select("url", "head_noun", "phrase")
-        .distinct()
-    )
-    w = Window.partitionBy("url", "head_noun").orderBy("phrase")
-    return (
-        heads.withColumn("__next", F.lead("phrase").over(w))
-        .filter(F.col("__next").isNotNull())
-        .select(
-            "url",
-            F.col("phrase").alias("subj"),
-            F.lit("synonym").alias("pred"),
-            F.col("__next").alias("obj"),
-        )
-    )
-
-
-def emit_triples(phrases: DataFrame, morph: DataFrame) -> DataFrame:
-    """Full §2.28 spec: union of both families.
-
-    No outer distinct: each family is internally de-duplicated and the
-    two can never collide — intra-phrase preds are POS pattern types
-    while synonym-chain preds are the literal 'synonym', and
-    synonym_triples emits (phrase, phrase) pairs with distinct lead
-    semantics. Dropping the outer distinct removes a full extra shuffle
-    of the whole triple set (the single biggest shuffle in the
-    pipeline at scale)."""
-    return intra_phrase_triples(phrases, morph).unionByName(synonym_triples(phrases))
 
 
 def triple_support(triples: DataFrame, n_salts: int = 16) -> DataFrame:
@@ -116,10 +36,10 @@ def triple_support(triples: DataFrame, n_salts: int = 16) -> DataFrame:
 
     Shapes, at 10^12-document scale:
 
-    * ``n_docs`` is a plain COUNT(*): emit_triples produces one row per
-      (url, subj, pred, obj) by construction (each family de-duplicates
-      per document and the two families cannot collide — see
-      emit_triples), so the row count per triple IS the document count,
+    * ``n_docs`` is a plain COUNT(*): the emitted table holds one row
+      per (url, subj, pred, obj) by construction (oracle.triples_for_doc
+      de-duplicates within a doc — see the module docstring), so the
+      row count per triple IS the document count,
       with no second distinct pass. The oracle recomputes it over its
       own DISTINCT set, so any drift in that invariant hash-mismatches
       (red-capable).
@@ -457,7 +377,7 @@ def extend_ids(
     mask = (1 << 40) - 1
     starts = (
         existing.select(
-            (F.col("id") / F.lit(1 << 40)).cast("long").alias("bucket"),
+            F.shiftright("id", 40).alias("bucket"),
             F.col("id").bitwiseAND(F.lit(mask)).alias("rank"),
         )
         .groupBy("bucket")

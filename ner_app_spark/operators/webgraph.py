@@ -166,8 +166,9 @@ def anchor_alias_dim(pages: DataFrame, min_src_hosts: int = 2) -> DataFrame:
     The endorsement gate is also the scale bound: at 10^12 pages the raw
     (alias, host) space is huge, but the dim the linker broadcasts is
     the gated one — raise ``min_src_hosts`` (real anchor dictionaries
-    prune exactly this way) to keep it broadcast-sized; past that, drop
-    candidate_pairs' broadcast hint and let the band join shuffle."""
+    prune exactly this way) to keep it broadcast-sized; the linker
+    collects it into one driver-side index (linking.link_mentions), so
+    that index is the bound a larger dim would hit."""
     return (
         anchor_aliases(pages)
         .filter(F.col("n_src_hosts") >= int(min_src_hosts))

@@ -466,7 +466,7 @@ def _kg_links_cte(n_pages: int) -> str:
     """Extends the analyze replay with the ENTIRE linking path rebuilt in
     SQL (operators/linking.py, round-3 VERDICT missing #1 family): char
     3-gram shingle multisets, per-band MinHash = lexicographic min of
-    md5(band || '|' || shingle) — portable because the Spark side hashes
+    md5(band || '|' || shingle) — portable because the linker hashes
     the same bytes — exact-probe UNION band-bucket candidates, cosine
     scoring over distinct strings, and the top-1-per-mention window with
     the (score DESC, entity_id ASC) tie-break. Ends in
@@ -479,7 +479,7 @@ def _kg_links_cte(n_pages: int) -> str:
     return _kg_base_cte(n_pages) + f""",
 aliasdim(alias, entity_id, canonical_name) AS (VALUES {_alias_dict_vals()}),
 mentions AS (SELECT DISTINCT head_noun AS mention FROM ph WHERE head_noun <> ''),
--- one row per char-3gram OCCURRENCE (linking.char_shingles: strings
+-- one row per char-3gram OCCURRENCE (linking._py_shingles: strings
 -- shorter than 3 yield themselves via substring clamping)
 msh AS MATERIALIZED (
   SELECT mention, substring(lower(mention), i, 3) AS sh

@@ -135,3 +135,32 @@ class CheckpointManager:
             wall_ms=int((time.monotonic() - t0) * 1000),
         )
         return out, metrics
+
+
+def persister(
+    workdir: str | None, n_parts: int = 16, metrics_out: list | None = None
+):
+    """Lineage truncation for the iterative graph algorithms (connected
+    components, PageRank, BFS, label propagation) — plans otherwise grow
+    with every round. Returns ``persist(df, name, key) -> DataFrame``
+    with two modes:
+      * default: ``localCheckpoint`` — blocks live on executors; fastest,
+        but an executor loss mid-run kills the job;
+      * ``workdir``: every round goes through the manifest-backed
+        per-partition checkpoint above, so a killed job re-invoked with
+        the same workdir resumes from the last published round,
+        recomputing only rounds whose manifest never committed
+        (tests/test_checkpoint_resume.py). Each round's StageMetrics is
+        appended to ``metrics_out`` when given."""
+    if not workdir:
+        return lambda df, name, key: df.localCheckpoint()
+
+    ckpt = CheckpointManager(workdir, n_parts=n_parts)
+
+    def persist(df: DataFrame, name: str, key: str) -> DataFrame:
+        out, m = ckpt.run_stage(df.sparkSession, name, df, key=key)
+        if metrics_out is not None:
+            metrics_out.append(m)
+        return out.drop("part_id")
+
+    return persist

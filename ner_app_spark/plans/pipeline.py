@@ -105,9 +105,8 @@ def run_pipeline(
     try:
         extracted = stage("extracted", extracted_text(pages), key="url")
         # ONE fused mapInPandas stage emits phrases AND triples (triples
-        # are per-doc local, oracle.triples_for_doc) — no posexplode/window
-        # shuffle between them; emit_triples stays as the declarative
-        # SQL-checkable variant (equivalence pinned in tests/test_fused.py)
+        # are per-doc local, oracle.triples_for_doc) — no shuffle between
+        # them; the kg_triples registry row hash-checks this same path
         fused = stage(
             "analysis",
             extract_phrases_and_triples(

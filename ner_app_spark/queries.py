@@ -31,10 +31,14 @@ from .operators import (
     webgraph,
 )
 from .operators.components import canonicalize
-from .operators.extract import extract_phrases, extracted_text
+from .operators.extract import (
+    extract_phrases,
+    extract_phrases_and_triples,
+    extracted_text,
+    fused_triples,
+)
 from .operators.linking import link_mentions
 from .operators.multimodal import decode_features, frame_sample, synth_media_df
-from .operators.triples import emit_triples
 from .sources.pages import alias_dict_df, morphology_df, synth_pages_df
 
 TOKRE = tfidf.TOKEN_SQL_RE
@@ -48,6 +52,12 @@ def _pages_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     n = {"0.001": 60, "0.01": 200, "0.1": 400}.get(sf, 100)
     return synth_pages_df(spark, n)
+
+
+def _triples_for(pages: DataFrame) -> DataFrame:
+    """(url, subj, pred, obj): the shipped triple path — the fused
+    per-doc Arrow stage run_pipeline uses — over ``pages``."""
+    return fused_triples(extract_phrases_and_triples(pages, num_partitions=8))
 
 
 #: Side-effectful rows (checkpoint_resume + the streaming experiments)
@@ -954,14 +964,10 @@ def q_kg_phrases(spark, sf_dir):
 
 
 def q_kg_triples(spark, sf_dir):
-    # emit_triples is the declarative implementation (joins/windows,
-    # operators/triples.py) — a genuinely different engine path from BOTH
-    # the fused Arrow emission (pinned equal in tests/test_fused.py) and
-    # the DuckDB SQL replay the driver hash-compares this row against
-    # (oracles._kg_triples_sql).
-    pages = _pages_for(spark, sf_dir)
-    phrases = extract_phrases(pages, num_partitions=8)
-    return emit_triples(phrases, morphology_df(spark))
+    # the fused Arrow emission production ships (run_pipeline), hash-
+    # compared by the driver against an independent DuckDB SQL replay
+    # (oracles._kg_triples_sql)
+    return _triples_for(_pages_for(spark, sf_dir))
 
 
 def q_kg_links(spark, sf_dir):
@@ -1231,14 +1237,12 @@ def q_kmeans_clusters(spark, sf_dir):
 def q_kg_motifs(spark, sf_dir):
     # 2-hop motif census over the emitted triples (GraphFrames-style
     # (a)-[p1]->(m)-[p2]->(c) as aggregate counts, never an enumeration)
-    phrases = extract_phrases(_pages_for(spark, sf_dir), num_partitions=8)
-    return graphalgo.motif_census_2hop(emit_triples(phrases, morphology_df(spark)))
+    return graphalgo.motif_census_2hop(_triples_for(_pages_for(spark, sf_dir)))
 
 
 def q_kg_degrees(spark, sf_dir):
     # global entity in/out degree over the distinct triple edge set
-    phrases = extract_phrases(_pages_for(spark, sf_dir), num_partitions=8)
-    return graphalgo.entity_degrees(emit_triples(phrases, morphology_df(spark)))
+    return graphalgo.entity_degrees(_triples_for(_pages_for(spark, sf_dir)))
 
 
 def q_host_link_edges(spark, sf_dir):
@@ -1334,15 +1338,13 @@ def q_stratified_sample(spark, sf_dir):
 
 def q_triple_support(spark, sf_dir):
     # corpus-level triple confidence: per distinct (subj, pred, obj) the
-    # supporting document count (plain COUNT(*) — emit_triples is
+    # supporting document count (plain COUNT(*) — the emitted table is
     # distinct per (url, triple) by construction, oracle red-caps the
     # invariant) and the salted distinct-HOST endorsement count (head
     # entities concentrate evidence exactly like hub hosts)
     from .operators.triples import triple_support
 
-    pages = _pages_for(spark, sf_dir)
-    phrases = extract_phrases(pages, num_partitions=8)
-    return triple_support(emit_triples(phrases, morphology_df(spark)))
+    return triple_support(_triples_for(_pages_for(spark, sf_dir)))
 
 
 def q_kg_negative_samples(spark, sf_dir):
@@ -1351,12 +1353,9 @@ def q_kg_negative_samples(spark, sf_dir):
     # md5 slot draw, collision wrap-around — no global index, no
     # partition-less window. The oracle replays the whole derivation
     # (triples SQL + the same bucket/rank arithmetic) bit-exactly.
-    pages = _pages_for(spark, sf_dir)
-    phrases = extract_phrases(pages, num_partitions=8)
-    triples = emit_triples(phrases, morphology_df(spark))
     from .operators.sampling import negative_samples
 
-    return negative_samples(triples)
+    return negative_samples(_triples_for(_pages_for(spark, sf_dir)))
 
 
 def q_mention_contexts(spark, sf_dir):
@@ -1378,9 +1377,7 @@ def q_kg_entity_ids(spark, sf_dir):
     # for shuffling 10^12-edge analytics on longs instead of strings.
     from .operators.triples import mint_ids
 
-    pages = _pages_for(spark, sf_dir)
-    phrases = extract_phrases(pages, num_partitions=8)
-    triples = emit_triples(phrases, morphology_df(spark))
+    triples = _triples_for(_pages_for(spark, sf_dir))
     ents = triples.select(F.col("subj").alias("entity")).union(
         triples.select(F.col("obj").alias("entity"))
     )
@@ -1393,9 +1390,7 @@ def q_kg_encoded_triples(spark, sf_dir):
     # + broadcast predicate dim.
     from .operators.triples import encode_triples
 
-    pages = _pages_for(spark, sf_dir)
-    phrases = extract_phrases(pages, num_partitions=8)
-    return encode_triples(emit_triples(phrases, morphology_df(spark)))
+    return encode_triples(_triples_for(_pages_for(spark, sf_dir)))
 
 
 def q_kg_extend_ids(spark, sf_dir):
@@ -1406,9 +1401,7 @@ def q_kg_extend_ids(spark, sf_dir):
     from .operators.triples import extend_ids, mint_ids
 
     def _ents(pages):
-        t = emit_triples(
-            extract_phrases(pages, num_partitions=8), morphology_df(spark)
-        )
+        t = _triples_for(pages)
         return t.select(F.col("subj").alias("entity")).union(
             t.select(F.col("obj").alias("entity"))
         )
@@ -1424,9 +1417,7 @@ def q_functional_violations(spark, sf_dir):
     # trusting the predicate as a merge key (operators/triples.py).
     from .operators.triples import functional_violations
 
-    pages = _pages_for(spark, sf_dir)
-    phrases = extract_phrases(pages, num_partitions=8)
-    return functional_violations(emit_triples(phrases, morphology_df(spark)))
+    return functional_violations(_triples_for(_pages_for(spark, sf_dir)))
 
 
 def q_kg_edge_split(spark, sf_dir):
@@ -1436,12 +1427,9 @@ def q_kg_edge_split(spark, sf_dir):
     # triple with an entity or predicate unseen in provisional train
     # flips to train). The oracle replays the bucket arithmetic and the
     # repair rule over the same triple SQL bit-exactly.
-    pages = _pages_for(spark, sf_dir)
-    phrases = extract_phrases(pages, num_partitions=8)
-    triples = emit_triples(phrases, morphology_df(spark))
     from .operators.sampling import edge_split
 
-    return edge_split(triples)
+    return edge_split(_triples_for(_pages_for(spark, sf_dir)))
 
 
 def q_predicate_stats(spark, sf_dir):
@@ -1451,9 +1439,7 @@ def q_predicate_stats(spark, sf_dir):
     # domain never keys a distinct shuffle (operators/triples.py).
     from .operators.triples import predicate_stats
 
-    pages = _pages_for(spark, sf_dir)
-    phrases = extract_phrases(pages, num_partitions=8)
-    return predicate_stats(emit_triples(phrases, morphology_df(spark)))
+    return predicate_stats(_triples_for(_pages_for(spark, sf_dir)))
 
 
 def q_triple_intervals(spark, sf_dir):
@@ -1465,9 +1451,9 @@ def q_triple_intervals(spark, sf_dir):
     from .operators.triples import triple_intervals
 
     pages = _pages_for(spark, sf_dir)
-    phrases = extract_phrases(pages, num_partitions=8)
-    triples = emit_triples(phrases, morphology_df(spark))
-    return triple_intervals(triples, pages, origin="2025-01-01 00:00:00")
+    return triple_intervals(
+        _triples_for(pages), pages, origin="2025-01-01 00:00:00"
+    )
 
 
 def q_dup_span_fraction(spark, sf_dir):

@@ -76,5 +76,5 @@ def stream_kg_triples(
 
 def triples_result(spark: SparkSession, sink_dir: str) -> DataFrame:
     """Union of the per-batch sinks (partition discovery on batch=N),
-    shaped like emit_triples output."""
+    shaped like extract.fused_triples output."""
     return spark.read.parquet(sink_dir).select("url", "subj", "pred", "obj")

@@ -166,6 +166,19 @@ def _bucket(subj: str, pred: str, obj: str) -> int:
     return struct.unpack("<I", hashlib.md5(key).digest()[:4])[0] % 100
 
 
+def test_edge_split_drops_null_key_rows(spark):
+    """A row with a NULL subj/pred/obj is not a triple: edge_split drops
+    it at entry and splits the rest exactly as without it."""
+    base = _many_triples(spark)
+    dirty = base.union(
+        spark.createDataFrame(
+            [("ent1", None, "ent2")], "subj string, pred string, obj string"
+        )
+    )
+    got = {tuple(r) for r in edge_split(dirty).collect()}
+    assert got == {tuple(r) for r in edge_split(base).collect()}
+
+
 def test_edge_split_repair_is_real_and_stable(spark):
     """A triple whose entities appear NOWHERE else and whose provisional
     bucket is val/test MUST flip to train (the repair path runs), and
@@ -324,6 +337,30 @@ def test_encode_triples_roundtrip(spark):
         (id2ent[r["subj_id"]], id2ent[r["obj_id"]]) for r in enc.collect()
     )
     assert orig == dec, "entity ids decode back to the exact edge list"
+
+
+def test_extend_ids_bucket_of_id_above_2_53(spark):
+    """An existing id past 2^53 keeps its bucket: float division would
+    round (10000 << 40) | (2^40 - 1) up to bucket 10001 and start that
+    bucket's novel ids after a rank it does not hold."""
+    import struct
+
+    from ner_app_spark.operators.triples import extend_ids
+
+    n_buckets = 1 << 14
+
+    def bucket(v: str) -> int:
+        return struct.unpack("<I", hashlib.md5(v.encode()).digest()[:4])[0] % n_buckets
+
+    top = (10000 << 40) | ((1 << 40) - 1)
+    novel = next(f"v{i}" for i in range(10**6) if bucket(f"v{i}") == 10001)
+    existing = spark.createDataFrame([("old", top)], "entity string, id long")
+    values = spark.createDataFrame([("old",), (novel,)], "entity string")
+    got = {
+        r["entity"]: r["id"]
+        for r in extend_ids(existing, values, n_buckets=n_buckets).collect()
+    }
+    assert got == {"old": top, novel: 10001 << 40}
 
 
 def test_extend_ids_preserves_and_continues(spark):

@@ -221,6 +221,23 @@ def test_pagerank_explicit_overflowing_scale_raises(spark):
         graphalgo.pagerank(_edges(spark, [("a", "b")]), iters=1, scale=10**18)
 
 
+def test_pagerank_mid_size_graph_long_arithmetic(spark):
+    """500-node ring: the initial rank scale // n = 2 * 10^9 fits an
+    int32 literal, and 85 * rank_scaled must still run in long
+    arithmetic (an int column overflows under ANSI). Every node of a
+    regular graph gets the same rank, replayed here in plain Python."""
+    n = 500
+    ring = [(f"n{i:03d}", f"n{(i + 1) % n:03d}") for i in range(n)]
+    iters = 3
+    rows = graphalgo.pagerank(_edges(spark, ring), iters=iters).collect()
+    scale = graphalgo.PR_SCALE
+    rank = scale // n
+    for _ in range(iters):
+        rank = (15 * scale) // (100 * n) + 2 * ((85 * rank) // (100 * 2))
+    assert len(rows) == n
+    assert {r["rank_scaled"] for r in rows} == {rank}
+
+
 def test_pagerank_derived_scale_preserves_mass(spark):
     # explicit larger scale: mass ~ scale (the invariant the int64-safety
     # argument rests on), and the (node-count-derived) default matches the

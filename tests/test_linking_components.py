@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ner_app_spark import morphology as M
 from ner_app_spark.operators.components import canonicalize, connected_components
-from ner_app_spark.operators.linking import link_mentions, score_pairs, candidate_pairs
+from ner_app_spark.operators.linking import link_mentions
 from ner_app_spark.sources.pages import alias_dict_df
 
 
@@ -81,29 +81,6 @@ def test_link_mentions_exact_and_fuzzy(spark):
     assert "zzzz-nomatch" not in links
 
 
-def test_link_mentions_arrow_matches_dataframe_path(spark):
-    """The production Arrow linker (one mapInPandas stage, broadcast alias
-    index) must be BIT-identical — including float scores and tie-breaks —
-    to the declarative candidate_pairs -> score_pairs -> window reference
-    path, which is itself the transcript of the DuckDB oracle."""
-    from ner_app_spark.operators.extract import extract_phrases
-    from ner_app_spark.operators.linking import link_mentions_df
-    from ner_app_spark.sources.pages import synth_pages_df
-
-    phrases = extract_phrases(synth_pages_df(spark, 120), num_partitions=4)
-    aliases = alias_dict_df(spark)
-    arrow = {
-        r["mention"]: (r["alias"], r["entity_id"], r["canonical_name"], r["score"])
-        for r in link_mentions(phrases, aliases).collect()
-    }
-    ref = {
-        r["mention"]: (r["alias"], r["entity_id"], r["canonical_name"], r["score"])
-        for r in link_mentions_df(phrases, aliases).collect()
-    }
-    assert len(arrow) > 0
-    assert arrow == ref  # exact dict equality: same keys, same floats
-
-
 def test_link_mentions_empty_input(spark):
     out = link_mentions(
         spark.createDataFrame([], "url string, head_noun string"),
@@ -111,17 +88,6 @@ def test_link_mentions_empty_input(spark):
     )
     assert out.count() == 0
     assert out.columns == ["mention", "alias", "entity_id", "canonical_name", "score"]
-
-
-def test_candidate_pairs_block_not_cross(spark):
-    """LSH blocking must not degenerate to a cross join."""
-    aliases = alias_dict_df(spark)
-    mentions = spark.createDataFrame(
-        [(m,) for m in M.noun_lemmas()[:20]], "mention string"
-    )
-    n_pairs = candidate_pairs(mentions, aliases).count()
-    n_cross = 20 * aliases.count()
-    assert n_pairs < n_cross * 0.5, f"blocking too loose: {n_pairs}/{n_cross}"
 
 
 def test_canonicalize_merges_colliding_aliases(spark):

@@ -8,9 +8,13 @@ from __future__ import annotations
 import pytest
 
 from ner_app_spark import oracle, synth
-from ner_app_spark.operators.extract import extract_phrases, extracted_text
-from ner_app_spark.operators.triples import emit_triples
-from ner_app_spark.sources.pages import morphology_df, synth_pages_df
+from ner_app_spark.operators.extract import (
+    extract_phrases,
+    extract_phrases_and_triples,
+    extracted_text,
+    fused_triples,
+)
+from ner_app_spark.sources.pages import synth_pages_df
 
 N_PAGES = 60
 
@@ -65,10 +69,10 @@ def test_phrases_match_oracle_exactly(spark, pages, golden):
 
 
 def test_triples_precision_recall(spark, pages, golden):
-    phrases = extract_phrases(pages, num_partitions=4)
+    fused = extract_phrases_and_triples(pages, num_partitions=4)
     got = {
         (r["url"], r["subj"], r["pred"], r["obj"])
-        for r in emit_triples(phrases, morphology_df(spark)).collect()
+        for r in fused_triples(fused).collect()
     }
     want = golden["triples"]
     tp = len(got & want)

@@ -48,8 +48,8 @@ def test_dim_join_is_broadcast(spark):
 def test_linking_is_single_arrow_stage(spark):
     """Production linking = distinct mention vocabulary -> ONE mapInPandas
     stage with the alias index broadcast. No join tree, no window: the
-    dimension-sized exchanges were a parallelism-independent ~1.2 s floor
-    (SCALING_watcher9 measured the links stage flat at 8 vs 32 cores)."""
+    dimension-sized exchanges of a join tree are a parallelism-independent
+    scheduling floor."""
     from ner_app_spark.operators.linking import link_mentions
     from ner_app_spark.sources.pages import alias_dict_df, synth_pages_df
     from ner_app_spark.operators.extract import extract_phrases
@@ -64,22 +64,6 @@ def test_linking_is_single_arrow_stage(spark):
     assert "Window" not in plan
 
 
-def test_linking_df_reference_path_alias_joins_are_broadcast(spark):
-    """The declarative reference path keeps the dimension joins broadcast
-    (never a shuffle of the mention side against the alias dim)."""
-    from ner_app_spark.operators.extract import extract_phrases
-    from ner_app_spark.operators.linking import link_mentions_df
-    from ner_app_spark.sources.pages import alias_dict_df, synth_pages_df
-
-    plan = _physical(
-        link_mentions_df(
-            extract_phrases(synth_pages_df(spark, 8), num_partitions=4),
-            alias_dict_df(spark),
-        )
-    )
-    assert "BroadcastHashJoin" in plan
-
-
 def test_pricing_summary_has_partial_aggregation(spark):
     plan = _physical(QUERIES["pricing_summary"](spark, SF_DIR))
     # map-side partial + final: two HashAggregate levels around one shuffle
@@ -90,16 +74,25 @@ def test_pricing_summary_has_partial_aggregation(spark):
 
 
 def test_extract_phrases_single_explicit_shuffle(spark):
-    from ner_app_spark.operators.extract import extract_phrases
+    """The phrase-only stage and the fused phrase+triple stage (the
+    shipped triple path) each plan exactly one exchange: the explicit
+    url-hash repartition. mapInPandas and the triple split add none."""
+    from ner_app_spark.operators.extract import (
+        extract_phrases,
+        extract_phrases_and_triples,
+        fused_triples,
+    )
     from ner_app_spark.sources.pages import synth_pages_df
 
-    df = extract_phrases(synth_pages_df(spark, 8), num_partitions=4)
-    plan = _physical(df)
-    # exactly the one explicit url-hash exchange; mapInPandas itself must
-    # not introduce another
-    assert plan.count("Exchange") == 1
-    assert "xxhash64" in plan
-    assert "MapInPandas" in plan
+    pages = synth_pages_df(spark, 8)
+    for df in (
+        extract_phrases(pages, num_partitions=4),
+        fused_triples(extract_phrases_and_triples(pages, num_partitions=4)),
+    ):
+        plan = _physical(df)
+        assert plan.count("Exchange") == 1
+        assert "xxhash64" in plan
+        assert "MapInPandas" in plan
 
 
 def test_search_query_side_is_broadcast(spark):
@@ -185,20 +178,3 @@ def test_topk_per_group_uses_window_group_limit(spark):
     plan = _optimized(QUERIES["topk_per_group"](spark, SF_DIR))
     # Spark 4 pushes row_number() <= k as WindowGroupLimit before the sort
     assert "WindowGroupLimit" in plan or "Window" in plan
-
-
-def test_triples_no_extra_shuffle_after_extract_partitioning(spark):
-    """emit_triples windows partition by (url, ...) — superset of the
-    extract stage's url hash partitioning. The morphology join must be
-    broadcast (map-side), not a shuffle."""
-    from ner_app_spark.operators.extract import extract_phrases
-    from ner_app_spark.operators.triples import emit_triples
-    from ner_app_spark.sources.pages import morphology_df, synth_pages_df
-
-    df = emit_triples(
-        extract_phrases(synth_pages_df(spark, 8), num_partitions=4),
-        morphology_df(spark),
-    )
-    plan = _physical(df)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
