@@ -305,9 +305,12 @@ def run_bench() -> dict:
 
 def run_scaling_child(cores: int, n_pages: int, stage: str = "all") -> dict:
     """One fresh-JVM measurement at local[cores]. stage='all' = the KG
-    job (kg_job); stage='extract' = the mapInPandas extract stage only,
-    the compute-dominant fraction."""
-    from ner_app_spark.operators.extract import extract_phrases
+    job (kg_job); stage='extract' = the fused mapInPandas extract stage
+    only (phrases and triples), the compute-dominant fraction."""
+    from ner_app_spark.operators.extract import (
+        extract_phrases_and_triples,
+        fused_phrases,
+    )
     from ner_app_spark.session import get_session
     from ner_app_spark.sources.pages import synth_pages_df
 
@@ -320,13 +323,17 @@ def run_scaling_child(cores: int, n_pages: int, stage: str = "all") -> dict:
     # pass of the identical job shape absorbs the one-time per-JVM costs
     # — Python-worker spin-up, codegen/JIT compile, broadcast machinery.
     if stage == "extract":
-        extract_phrases(synth_pages_df(spark, 200), num_partitions=cores).count()
+        extract_phrases_and_triples(
+            synth_pages_df(spark, 200), num_partitions=cores
+        ).count()
     else:
         kg_job(spark, 200, cores)
     t0 = time.monotonic()
     if stage == "extract":
-        n_phrases = extract_phrases(
-            synth_pages_df(spark, n_pages), num_partitions=cores * 2
+        n_phrases = fused_phrases(
+            extract_phrases_and_triples(
+                synth_pages_df(spark, n_pages), num_partitions=cores * 2
+            )
         ).count()
         counts: dict = {"documents": n_pages, "phrases": n_phrases}
     else:

@@ -1,14 +1,17 @@
-"""Extraction stage: pages -> extracted text -> per-doc phrases.
+"""Extraction stage: pages -> extracted text -> per-doc phrases AND triples.
 
 This is the Spark lifecycle equivalent of the reference's flagship
 ``POST /`` analyze path (/root/reference/src/routers/views.py:38-77 ->
 src/analysis/phrase_extractor.py:45-71), SURVEY.md §3.1:
 
     read(pages)
+      -> extracted_text pUDF                        [byte-identical invariant]
       -> filter(lang='ru', text non-empty)          [P6, lang gate]
       -> repartition(xxhash64(url) % N)             [explicit, resume-stable]
-      -> extract_text pUDF                          [byte-identical invariant]
-      -> mapInPandas(extract_phrases)               [F1-F5, A1, A2, A6, O1]
+      -> mapInPandas(extract_phrases_and_triples)   [F1-F5, A1, A2, A6, O1, §2.28]
+
+There is one analyze stage: phrases and triples come out of the same
+Arrow pass, split afterwards by ``fused_phrases`` / ``fused_triples``.
 
 Scale notes (100 TB):
   * Single-document TF-IDF (A2) is per-doc local math — computing it
@@ -36,17 +39,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-)
-
-PHRASE_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("phrase", StringType(), False),
-        StructField("type", StringType(), False),
-        StructField("tfidf", DoubleType(), False),
-        StructField("length", IntegerType(), False),
-        StructField("head_noun", StringType(), False),
-    ]
 )
 
 EXTRACTED_SCHEMA = StructType(
@@ -88,34 +80,6 @@ def extracted_text(pages: DataFrame) -> DataFrame:
             yield out[["url", "extracted", "lang"]]
 
     return pages.select("url", "html", "lang").mapInPandas(run, schema=EXTRACTED_SCHEMA)
-
-
-def _analyze_batches(batches) -> Iterator:
-    """Arrow-batched analyze: tokenization, lemma n-grams, single-doc
-    TF-IDF, POS-pattern gate, head noun — the whole per-doc hot path in
-    one Python worker pass, identical math to ner_app_spark.oracle."""
-    import pandas as pd
-
-    from ..oracle import analyze
-
-    for pdf in batches:
-        urls: list[str] = []
-        rows: dict[str, list] = {
-            "phrase": [],
-            "type": [],
-            "tfidf": [],
-            "length": [],
-            "head_noun": [],
-        }
-        for url, text in zip(pdf["url"], pdf["text"]):
-            for p in analyze(text):
-                urls.append(url)
-                rows["phrase"].append(p.phrase)
-                rows["type"].append(p.type)
-                rows["tfidf"].append(p.tfidf)
-                rows["length"].append(p.length)
-                rows["head_noun"].append(p.head_noun)
-        yield pd.DataFrame({"url": urls, **rows})
 
 
 def _analyze_fused_batches(batches) -> Iterator:
@@ -187,7 +151,10 @@ def extract_phrases_and_triples(
 ) -> DataFrame:
     """pages -> fused (url, kind, phrase..., subj/pred/obj) rows: the
     map-side-fused flagship stage. Split with fused_phrases/fused_triples.
-    Same gates and partitioning contract as extract_phrases."""
+
+    Explicit repartition on xxhash64(url) (north_rule: partitioning
+    handled explicitly) gives uniform Arrow batch sizes and stable
+    resume partitions regardless of upstream file layout."""
     docs = pages.filter(F.col("lang") == lang).filter(F.length(F.col(text_col)) > 0)
     docs = docs.select("url", F.col(text_col).alias("text"))
     if num_partitions:
@@ -196,7 +163,8 @@ def extract_phrases_and_triples(
 
 
 def fused_phrases(fused: DataFrame) -> DataFrame:
-    """phrase rows of a fused frame, PHRASE_SCHEMA-shaped."""
+    """phrase rows of a fused frame: (url, phrase, type, tfidf, length,
+    head_noun)."""
     return fused.filter(F.col("kind") == "phrase").select(
         "url", "phrase", "type",
         F.col("tfidf").cast("double").alias("tfidf"),
@@ -211,21 +179,3 @@ def fused_triples(fused: DataFrame) -> DataFrame:
         "url", "subj", "pred", "obj"
     )
 
-
-def extract_phrases(
-    pages: DataFrame,
-    lang: str = "ru",
-    num_partitions: int | None = None,
-    text_col: str = "text",
-) -> DataFrame:
-    """pages -> phrases(url, phrase, type, tfidf, length, head_noun).
-
-    Explicit repartition on xxhash64(url) (north_rule: partitioning
-    handled explicitly) gives uniform Arrow batch sizes and stable
-    resume partitions regardless of upstream file layout.
-    """
-    docs = pages.filter(F.col("lang") == lang).filter(F.length(F.col(text_col)) > 0)
-    docs = docs.select("url", F.col(text_col).alias("text"))
-    if num_partitions:
-        docs = docs.repartition(num_partitions, F.xxhash64("url"))
-    return docs.mapInPandas(_analyze_batches, schema=PHRASE_SCHEMA)

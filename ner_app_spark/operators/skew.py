@@ -55,19 +55,3 @@ def salted_distinct_count(
     if count_out is not None:
         final_aggs.append(F.sum("__cnt").alias(count_out))
     return partial.groupBy(*key_cols).agg(*final_aggs)
-
-
-def entity_doc_frequency(
-    phrases: DataFrame, n_salts: int = 16, mention_col: str = "head_noun"
-) -> DataFrame:
-    """(entity, n_docs): how many documents mention each head entity —
-    the canonical head-entity-skewed aggregation of the KG pipeline."""
-    return salted_distinct_count(
-        phrases.filter(F.col(mention_col) != "").select(
-            F.col(mention_col).alias("entity"), "url"
-        ),
-        ["entity"],
-        "url",
-        n_salts=n_salts,
-        out="n_docs",
-    )

@@ -47,16 +47,6 @@ def quality_expr(n_tokens, n_chars, n_punct, n_stop):
     )
 
 
-def token_count(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_tokens): whitespace-word count — the cheap token meter."""
-    return docs.select(
-        "doc_id",
-        F.size(
-            F.expr(f"regexp_extract_all(lower(text), '{TOKEN_SQL_RE}', 0)")
-        ).cast("bigint").alias("n_tokens"),
-    )
-
-
 def lang_id(docs: DataFrame) -> DataFrame:
     """(doc_id, lang_pred, marker_hits): argmax of marker-vocabulary hits;
     cyrillic-dominant text short-circuits to 'ru'. Deterministic tie-break

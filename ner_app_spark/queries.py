@@ -32,9 +32,9 @@ from .operators import (
 )
 from .operators.components import canonicalize
 from .operators.extract import (
-    extract_phrases,
     extract_phrases_and_triples,
     extracted_text,
+    fused_phrases,
     fused_triples,
 )
 from .operators.linking import link_mentions
@@ -52,6 +52,13 @@ def _pages_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     n = {"0.001": 60, "0.01": 200, "0.1": 400}.get(sf, 100)
     return synth_pages_df(spark, n)
+
+
+def _phrases_for(pages: DataFrame) -> DataFrame:
+    """(url, phrase, type, tfidf, length, head_noun): the shipped phrase
+    path — the fused per-doc Arrow stage run_pipeline uses — over
+    ``pages``."""
+    return fused_phrases(extract_phrases_and_triples(pages, num_partitions=8))
 
 
 def _triples_for(pages: DataFrame) -> DataFrame:
@@ -955,8 +962,7 @@ def q_kg_phrases(spark, sf_dir):
     # run-split n-grams, c/sqrt(sum c^2), POS-pattern gate and head-noun
     # scan all recomputed engine-side; only the frozen morphology dim is
     # shared. tfidf is emitted raw (bit-identical IEEE ops both sides).
-    pages = _pages_for(spark, sf_dir)
-    return extract_phrases(pages, num_partitions=8).select(
+    return _phrases_for(_pages_for(spark, sf_dir)).select(
         "url", "phrase", "type", "tfidf",
         F.col("length").cast("long").alias("length"),
         "head_noun",
@@ -977,7 +983,7 @@ def q_kg_links(spark, sf_dir):
     # ulp), and (b) every emitted link must clear min_score. Violations
     # are counted in-query and raise -> red driver row.
     min_score = 0.5
-    phrases = extract_phrases(_pages_for(spark, sf_dir), num_partitions=8)
+    phrases = _phrases_for(_pages_for(spark, sf_dir))
     links = link_mentions(phrases, alias_dict_df(spark), min_score=min_score)
     aliases = alias_dict_df(spark).select(F.col("alias").alias("mention")).distinct()
     exact = links.join(F.broadcast(aliases), "mention", "left_semi")
@@ -1009,7 +1015,7 @@ def q_kg_canonical(spark, sf_dir):
     # connected-components canonicalization with the defining invariant
     # checked IN-QUERY: every same-entity link's two endpoints must map to
     # the same canonical id (zero violations, or the row goes red)
-    phrases = extract_phrases(_pages_for(spark, sf_dir), num_partitions=8)
+    phrases = _phrases_for(_pages_for(spark, sf_dir))
     links = link_mentions(phrases, alias_dict_df(spark))
     pairs = links.select("mention", "entity_id")
     canon = canonicalize(pairs)
@@ -1474,7 +1480,7 @@ def q_alias_ambiguity(spark, sf_dir):
     # broadcast join (operators/linking.py).
     from .operators.linking import alias_ambiguity
 
-    phrases = extract_phrases(_pages_for(spark, sf_dir), num_partitions=8)
+    phrases = _phrases_for(_pages_for(spark, sf_dir))
     return alias_ambiguity(phrases, alias_dict_df(spark))
 
 

@@ -167,11 +167,6 @@ def _schema_fields(schema: str) -> list[tuple[str, str]]:
     return fields
 
 
-def _schema_field_names(schema: str) -> list[str]:
-    """Field names from a DDL schema string (see _schema_fields)."""
-    return [n for n, _ in _schema_fields(schema)]
-
-
 def _free_gib(path: str) -> float:
     try:
         st = os.statvfs(path)

@@ -8,7 +8,6 @@ the source scales like a scan instead of a driver-side collect.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -95,8 +94,3 @@ def morphology_df(spark: SparkSession) -> DataFrame:
         spark, morphology_rows(), schema="surface string, lemma string, pos string"
     )
 
-
-def with_part_id(df: DataFrame, n_parts: int, key: str = "url") -> DataFrame:
-    """Stable partition id from the data (not from Spark partition index):
-    resume-safe and salt-safe (SURVEY.md §7.6c)."""
-    return df.withColumn("part_id", F.pmod(F.xxhash64(F.col(key)), F.lit(n_parts)))

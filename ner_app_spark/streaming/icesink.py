@@ -31,8 +31,8 @@ from hashlib import md5
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.extract import extract_phrases_and_triples, fused_triples
 from ..tables.icelite import IceTable, bucket
+from .pipeline import start_triples_stream
 
 
 def checkpoint_key(checkpoint_dir: str) -> str:
@@ -126,44 +126,26 @@ def stream_kg_triples_to_table(
     table_path: str,
     checkpoint_dir: str,
     schema,
-    lang: str = "ru",
-    num_partitions: int = 8,
-    max_files_per_trigger: int = 1,
     target_files: int | None = None,
-    available_now: bool = True,
-    processing_interval: str = "30 seconds",
+    **stream_opts,
 ):
     """The incremental KG pipeline landing in a snapshot table: same
-    fused extract stage as pipeline.stream_kg_triples, but the sink is an
-    icelite triples table (bucketed by subj like the batch publisher)
-    with exactly-once micro-batch commits."""
+    stream as pipeline.stream_kg_triples (``stream_opts`` are
+    start_triples_stream's options), but the sink is an icelite triples
+    table (bucketed by subj like the batch publisher) with exactly-once
+    micro-batch commits."""
     key = checkpoint_key(checkpoint_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        fused = extract_phrases_and_triples(
-            batch_df, lang=lang, num_partitions=num_partitions
-        )
+    def sink(triples: DataFrame, batch_id: int) -> None:
         commit_batch(
-            spark, table_path, fused_triples(fused), key, batch_id,
+            spark, table_path, triples, key, batch_id,
             partition_spec=[bucket("subj", 16)], sort_order=["subj"],
             target_files=target_files,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_triples_stream(
+        spark, input_dir, checkpoint_dir, schema, sink, **stream_opts
     )
-    writer = (
-        writer.trigger(availableNow=True)
-        if available_now
-        else writer.trigger(processingTime=processing_interval)
-    )
-    return writer.start()
 
 
 def table_triples_result(spark: SparkSession, table_path: str) -> DataFrame:

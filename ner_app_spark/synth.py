@@ -185,10 +185,3 @@ def synth_alias_dict(seed: int = 42) -> list[dict]:
                 {"alias": lemma, "entity_id": eid + 1000, "canonical_name": lemma.upper() + "_ALT"}
             )
     return rows
-
-
-def pages_count_for_sf(sf: float) -> int:
-    """Page count scaled to the driver's sf convention (sf0.01 ~ 60k
-    lineitem rows). 2000 pages per unit-sf0.01 keeps smoke fast and bench
-    meaningful."""
-    return max(50, int(round(sf * 200_000)))

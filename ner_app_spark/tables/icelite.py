@@ -12,9 +12,12 @@ parquet files + JSON metadata:
   * **optimistic-concurrency commits** — a writer claims the next
     metadata version by hard-linking a fully-written temp file into
     place (the spec's atomic swap; readers can never observe a partial
-    commit); a losing writer gets :class:`CommitConflict` and retries by
-    re-merging its manifest against the new current snapshot — data
-    files are immutable and uniquely named, so retry is metadata-only;
+    commit). Every writer runs the same loop, ``_commit_retrying``: read
+    the current metadata, build the next version from it, claim it; a
+    losing writer gets :class:`CommitConflict` and rebuilds against the
+    winner — data files are immutable and uniquely named, so retry is
+    metadata-only — and gives up, raising CommitConflict, after
+    ``_COMMIT_RETRIES`` lost races;
   * **manifest file stats + scan pruning** — the manifest records per
     data file: record count, byte size, and per-column min/max/null
     counts harvested from the parquet FOOTERS by a distributed job
@@ -83,6 +86,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 _FMT = "icelite/1"
+
+#: commit attempts a writer makes before a lost race raises CommitConflict
+_COMMIT_RETRIES = 5
 
 
 class CommitConflict(Exception):
@@ -488,9 +494,6 @@ class IceTable:
     def _read_manifest(self, snapshot_id: str) -> list[dict]:
         return self._read_snap(snapshot_id)[0]
 
-    def _read_deletes(self, snapshot_id: str) -> list[dict]:
-        return self._read_snap(snapshot_id)[1]
-
     @staticmethod
     def _next_seq(files: list[dict], deletes: list[dict]) -> int:
         return max(
@@ -550,6 +553,57 @@ class IceTable:
                 f.write(body)
             os.replace(tmp, p)
         return sid
+
+    def _commit_retrying(self, op: str, build) -> dict | None:
+        """The one optimistic-commit loop every writer runs: read the
+        current metadata, ``build(meta)`` the next metadata from it and
+        claim the next version through ``_commit``. A lost race re-reads
+        the winner and rebuilds; data files are immutable and already
+        written, so a retry is metadata-only. ``build`` returning None
+        means there is nothing to commit, and so does the loop. Returns
+        the committed metadata; raises CommitConflict naming ``op`` after
+        _COMMIT_RETRIES lost races."""
+        for _ in range(_COMMIT_RETRIES):
+            meta = self._read_meta()
+            new_meta = build(meta)
+            if new_meta is None:
+                return None
+            try:
+                self._commit(new_meta, expected_version=meta["_version"])
+                return new_meta
+            except CommitConflict:
+                continue
+        raise CommitConflict(
+            f"{op} lost {_COMMIT_RETRIES} commit races at {self.path}"
+        )
+
+    def _snapshot_meta(
+        self,
+        meta: dict,
+        op: str,
+        files: list[dict],
+        deletes: list[dict],
+        added: list[dict],
+        schema: StructType | None = None,
+        summary: dict | None = None,
+    ) -> dict:
+        """``meta`` advanced by one ``op`` snapshot over (``files``,
+        ``deletes``): writes its manifest and appends its log entry;
+        ``summary`` merges into the entry's summary and ``schema``, when
+        given, replaces the table schema."""
+        sid = self._write_manifest(files, deletes)
+        entry = self._snap_entry(
+            sid, meta["current_snapshot_id"], op, added, files
+        )
+        entry["summary"].update(summary or {})
+        new_meta = {
+            **meta,
+            "current_snapshot_id": sid,
+            "snapshots": meta["snapshots"] + [entry],
+        }
+        if schema is not None:
+            new_meta["schema_json"] = json.loads(schema.json())
+        return new_meta
 
     # ---------------- write path
 
@@ -672,17 +726,17 @@ class IceTable:
         spark: SparkSession,
         df: DataFrame,
         target_files: int | None = None,
-        max_retries: int = 5,
         summary_extra: dict | None = None,
     ) -> str:
         """Commit ``df`` as a new snapshot on top of current. New columns
         widen the snapshot schema (add-column evolution); columns the
         table has but ``df`` lacks are null-filled. On CommitConflict the
-        manifest merge retries against the winner — the data files were
-        written once and are reused verbatim. ``summary_extra`` merges
-        into the snapshot's summary — the hook a streaming sink uses to
-        stamp its (checkpoint, batch_id) commit marker (Iceberg stores
-        the same thing in snapshot summary properties)."""
+        manifest merge retries against the winner, whose schema is widened
+        with this append's new columns — the data files were written once
+        and are reused verbatim. ``summary_extra`` merges into the
+        snapshot's summary — the hook a streaming sink uses to stamp its
+        (checkpoint, batch_id) commit marker (Iceberg stores the same
+        thing in snapshot summary properties)."""
         meta = self._read_meta()
         spec = [Transform.from_json(d) for d in meta["partition_spec"]]
         schema = StructType.fromJson(meta["schema_json"])
@@ -691,35 +745,21 @@ class IceTable:
             spark, aligned, spec, target_files,
             sort_cols=meta.get("sort_order", []),
         )
-        for _ in range(max_retries):
+
+        def build(meta: dict) -> dict:
             base, base_deletes = self._read_snap(meta["current_snapshot_id"])
             seq = self._next_seq(base, base_deletes)
             for e in added:
                 e["seq"] = seq
-            files = base + added
-            sid = self._write_manifest(files, base_deletes)
-            new_meta = dict(meta)
-            new_meta["schema_json"] = json.loads(new_schema.json())
-            new_meta["current_snapshot_id"] = sid
-            entry = self._snap_entry(
-                sid, meta["current_snapshot_id"], "append", added, files
+            return self._snapshot_meta(
+                meta, "append", base + added, base_deletes, added,
+                schema=_widened(
+                    StructType.fromJson(meta["schema_json"]), new_schema
+                ),
+                summary=summary_extra,
             )
-            if summary_extra:
-                entry["summary"].update(summary_extra)
-            new_meta["snapshots"] = meta["snapshots"] + [entry]
-            try:
-                self._commit(new_meta, expected_version=meta["_version"])
-                return sid
-            except CommitConflict:
-                meta = self._read_meta()  # re-merge against the winner
-                merged = StructType.fromJson(meta["schema_json"])
-                for f in new_schema.fields:
-                    if f.name not in merged.fieldNames():
-                        merged = merged.add(f)
-                new_schema = merged
-        raise CommitConflict(
-            f"append lost {max_retries} commit races at {self.path}"
-        )
+
+        return self._commit_retrying("append", build)["current_snapshot_id"]
 
     def overwrite(
         self,
@@ -739,8 +779,8 @@ class IceTable:
             spark, df, spec, target_files,
             sort_cols=meta.get("sort_order", []),
         )
-        for _ in range(5):
-            meta = self._read_meta()
+
+        def build(meta: dict) -> dict:
             cur, cur_dels = self._read_snap(meta["current_snapshot_id"])
             seq = self._next_seq(cur, cur_dels)
             for e in added:
@@ -748,30 +788,13 @@ class IceTable:
             # table contents replaced wholesale: prior equality deletes
             # have nothing left to apply to, so the new manifest carries
             # none
-            sid = self._write_manifest(added)
-            new_meta = dict(meta)
-            new_meta["schema_json"] = json.loads(df.schema.json())
-            new_meta["current_snapshot_id"] = sid
-            new_meta["snapshots"] = meta["snapshots"] + [
-                self._snap_entry(
-                    sid, meta["current_snapshot_id"], "overwrite", added, added
-                )
-            ]
-            try:
-                self._commit(new_meta, expected_version=meta["_version"])
-                return sid
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"overwrite lost 5 commit races at {self.path}"
-        )
+            return self._snapshot_meta(
+                meta, "overwrite", added, [], added, schema=df.schema
+            )
 
-    def delete(
-        self,
-        spark: SparkSession,
-        keys_df: DataFrame,
-        max_retries: int = 5,
-    ) -> str:
+        return self._commit_retrying("overwrite", build)["current_snapshot_id"]
+
+    def delete(self, spark: SparkSession, keys_df: DataFrame) -> str:
         """Equality delete (Iceberg v2 delete files): remove every row
         whose key tuple appears in ``keys_df`` — the columns of
         ``keys_df`` ARE the key columns. The keys are written ONCE as
@@ -792,33 +815,24 @@ class IceTable:
         written = self._write_data(
             spark, keys_df.dropDuplicates(key_cols), spec=[], target_files=None
         )
-        for _ in range(max_retries):
-            meta = self._read_meta()
+
+        def build(meta: dict) -> dict:
             base, base_deletes = self._read_snap(meta["current_snapshot_id"])
             seq = self._next_seq(base, base_deletes)
             dentries = [
                 {**e, "key_cols": key_cols, "seq": seq} for e in written
             ]
-            deletes = base_deletes + dentries
-            sid = self._write_manifest(base, deletes)
-            entry = self._snap_entry(
-                sid, meta["current_snapshot_id"], "delete", [], base
+            return self._snapshot_meta(
+                meta, "delete", base, base_deletes + dentries, [],
+                summary={
+                    "delete_files": len(dentries),
+                    "deleted_key_records": sum(
+                        e["record_count"] for e in dentries
+                    ),
+                },
             )
-            entry["summary"]["delete_files"] = len(dentries)
-            entry["summary"]["deleted_key_records"] = sum(
-                e["record_count"] for e in dentries
-            )
-            new_meta = dict(meta)
-            new_meta["current_snapshot_id"] = sid
-            new_meta["snapshots"] = meta["snapshots"] + [entry]
-            try:
-                self._commit(new_meta, expected_version=meta["_version"])
-                return sid
-            except CommitConflict:
-                continue  # delete files immutable: metadata-only retry
-        raise CommitConflict(
-            f"delete lost {max_retries} commit races at {self.path}"
-        )
+
+        return self._commit_retrying("delete", build)["current_snapshot_id"]
 
     def upsert(
         self,
@@ -826,7 +840,6 @@ class IceTable:
         df: DataFrame,
         key_cols: list[str],
         target_files: int | None = None,
-        max_retries: int = 5,
     ) -> str:
         """MERGE: atomically replace every row whose key tuple matches
         ``df`` and insert ``df``'s rows — ONE ``merge`` snapshot commit
@@ -841,7 +854,7 @@ class IceTable:
         files the one after, so the scan-time rule (delete removes rows
         with file seq <= delete seq) scrubs every prior version and
         spares the rows committed here. Metadata-only retry on commit
-        races, like every other writer."""
+        races, widening the winner's schema like ``append``."""
         meta = self._read_meta()
         schema = StructType.fromJson(meta["schema_json"])
         missing = [c for c in key_cols if c not in schema.fieldNames()]
@@ -858,7 +871,8 @@ class IceTable:
             df.select(*key_cols).dropDuplicates(list(key_cols)),
             spec=[], target_files=None,
         )
-        for _ in range(max_retries):
+
+        def build(meta: dict) -> dict:
             base, base_deletes = self._read_snap(meta["current_snapshot_id"])
             dseq = self._next_seq(base, base_deletes)
             dentries = [
@@ -867,32 +881,18 @@ class IceTable:
             ]
             for e in added:
                 e["seq"] = dseq + 1
-            files = base + added
-            sid = self._write_manifest(files, base_deletes + dentries)
-            entry = self._snap_entry(
-                sid, meta["current_snapshot_id"], "merge", added, files
+            return self._snapshot_meta(
+                meta, "merge", base + added, base_deletes + dentries, added,
+                schema=_widened(
+                    StructType.fromJson(meta["schema_json"]), new_schema
+                ),
+                summary={
+                    "delete_files": len(dentries),
+                    "upsert_keys": sum(e["record_count"] for e in dentries),
+                },
             )
-            entry["summary"]["delete_files"] = len(dentries)
-            entry["summary"]["upsert_keys"] = sum(
-                e["record_count"] for e in dentries
-            )
-            new_meta = dict(meta)
-            new_meta["schema_json"] = json.loads(new_schema.json())
-            new_meta["current_snapshot_id"] = sid
-            new_meta["snapshots"] = meta["snapshots"] + [entry]
-            try:
-                self._commit(new_meta, expected_version=meta["_version"])
-                return sid
-            except CommitConflict:
-                meta = self._read_meta()  # re-merge against the winner
-                merged = StructType.fromJson(meta["schema_json"])
-                for f in new_schema.fields:
-                    if f.name not in merged.fieldNames():
-                        merged = merged.add(f)
-                new_schema = merged
-        raise CommitConflict(
-            f"upsert lost {max_retries} commit races at {self.path}"
-        )
+
+        return self._commit_retrying("upsert", build)["current_snapshot_id"]
 
     # ---------------- table maintenance
 
@@ -902,7 +902,6 @@ class IceTable:
         small_file_bytes: int = 32 << 20,
         target_file_bytes: int = 128 << 20,
         min_input_files: int = 2,
-        max_retries: int = 5,
         _pre_commit=None,
     ) -> str | None:
         """Rewrite small data files into target-size files (Iceberg's
@@ -940,32 +939,14 @@ class IceTable:
         in_paths = {e["path"] for e in inputs}
         in_records = sum(e["record_count"] for e in inputs)
         rewrite_seq = max(e.get("seq", 0) for e in inputs)
-        spec = [Transform.from_json(d) for d in meta["partition_spec"]]
-        schema = StructType.fromJson(meta["schema_json"])
-        df = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*sorted(in_paths))
-        )
-        # physically purge equality-deleted rows while rewriting (the
-        # rewritten files keep the max input seq, so a delete committed
-        # concurrently — which necessarily gets a higher seq — still
-        # applies to them at scan time; already-applied deletes re-apply
-        # as no-ops until pruned)
-        df = _apply_equality_deletes(
-            spark, df,
-            {e["path"]: e.get("seq", 0) for e in inputs},
-            base_deletes,
-        )
-        # project to the snapshot schema exactly as scan() does: hidden
-        # _p_* columns drop (the rewrite re-derives them), evolved-in
-        # columns null-fill
-        df = df.select(
-            *[
-                F.col(f.name).cast(f.dataType)
-                if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
+        # read through the scan path: equality-deleted rows are purged
+        # physically (the rewritten files keep the max input seq, so a
+        # delete committed concurrently — which necessarily gets a higher
+        # seq — still applies to them at scan time; already-applied
+        # deletes re-apply as no-ops until pruned), hidden _p_* columns
+        # drop (the rewrite re-derives them), evolved-in columns null-fill
+        df, _ = self._read_files(
+            spark, meta, sorted(inputs, key=lambda e: e["path"]), base_deletes
         )
         # with live deletes the conserved quantity is the SURVIVOR count
         expect_records = df.count() if base_deletes else in_records
@@ -973,15 +954,21 @@ class IceTable:
             1, -(-sum(e["size_bytes"] for e in inputs) // target_file_bytes)
         )
         rewritten = self._write_data(
-            spark, df, spec, target_files=n_out,
+            spark, df,
+            [Transform.from_json(d) for d in meta["partition_spec"]],
+            target_files=n_out,
             sort_cols=meta.get("sort_order", []),
         )
         for e in rewritten:
             e["seq"] = rewrite_seq
-        if sum(e["record_count"] for e in rewritten) != expect_records:
+
+        def drop_rewrite() -> None:
             for e in rewritten:
                 with contextlib_suppress(OSError):
                     os.remove(e["path"])
+
+        if sum(e["record_count"] for e in rewritten) != expect_records:
+            drop_rewrite()
             raise RuntimeError(
                 f"compaction dropped rows at {self.path}: "
                 f"{expect_records} expected, "
@@ -989,20 +976,12 @@ class IceTable:
             )
         if _pre_commit is not None:
             _pre_commit()
-        for _ in range(max_retries):
-            meta = self._read_meta()
-            base = self._read_manifest(meta["current_snapshot_id"])
-            base_paths = {e["path"] for e in base}
-            if not in_paths <= base_paths:
-                # an overwrite replaced (some of) our inputs: abort,
-                # metadata untouched, rewrite output removed
-                for e in rewritten:
-                    with contextlib_suppress(OSError):
-                        os.remove(e["path"])
-                return None
-            files = [
-                e for e in base if e["path"] not in in_paths
-            ] + rewritten
+
+        def build(meta: dict) -> dict | None:
+            cur, cur_deletes = self._read_snap(meta["current_snapshot_id"])
+            if not in_paths <= {e["path"] for e in cur}:
+                return None  # an overwrite replaced (some of) our inputs
+            untouched = [e for e in cur if e["path"] not in in_paths]
             # prune delete files whose every target was just purged: a
             # delete we APPLIED during the rewrite (it was in
             # base_deletes) survives only if some UNTOUCHED data file
@@ -1011,38 +990,29 @@ class IceTable:
             # still present in the rewritten files and the seq rule
             # still removes them at scan time
             applied_paths = {d["path"] for d in base_deletes}
-            untouched_seqs = [
-                e.get("seq", 0) for e in base if e["path"] not in in_paths
-            ]
-            cur_deletes = self._read_deletes(meta["current_snapshot_id"])
+            untouched_seqs = [e.get("seq", 0) for e in untouched]
             live_deletes = [
                 d for d in cur_deletes
                 if d["path"] not in applied_paths
                 or any(s <= d.get("seq", 0) for s in untouched_seqs)
             ]
-            sid = self._write_manifest(files, live_deletes)
-            entry = self._snap_entry(
-                sid, meta["current_snapshot_id"], "replace", rewritten, files
+            return self._snapshot_meta(
+                meta, "replace", untouched + rewritten, live_deletes,
+                rewritten, summary={"rewritten_files": len(inputs)},
             )
-            entry["summary"]["rewritten_files"] = len(inputs)
-            new_meta = dict(meta)
-            new_meta["current_snapshot_id"] = sid
-            new_meta["snapshots"] = meta["snapshots"] + [entry]
-            try:
-                self._commit(new_meta, expected_version=meta["_version"])
-                return sid
-            except CommitConflict:
-                continue  # re-merge against the winner
-        raise CommitConflict(
-            f"compaction lost {max_retries} commit races at {self.path}"
-        )
+
+        committed = self._commit_retrying("compact", build)
+        if committed is None:
+            # aborted: metadata untouched, rewrite output removed
+            drop_rewrite()
+            return None
+        return committed["current_snapshot_id"]
 
     def expire_snapshots(
         self,
         keep_last: int = 2,
         clean_orphans: bool = False,
         orphan_grace_sec: float = 3600.0,
-        max_retries: int = 5,
     ) -> dict:
         """Expire history: retain the last ``keep_last`` snapshots (always
         including current), delete data files and manifests referenced
@@ -1053,7 +1023,8 @@ class IceTable:
         Ordering: the pruned metadata commits FIRST, then files are
         deleted — a reader of the new metadata never sees a missing
         file; readers pinned to an expired snapshot fail afterwards,
-        which is the defined semantics of expiration.
+        which is the defined semantics of expiration. A lost commit race
+        (a writer appended mid-expire) recomputes the plan.
 
         ``clean_orphans`` additionally removes data files referenced by
         NO retained snapshot at all (aborted writes, lost commit races)
@@ -1062,8 +1033,9 @@ class IceTable:
         commit (exactly why real Iceberg's remove_orphan_files takes an
         age threshold).
         """
-        for _ in range(max_retries):
-            meta = self._read_meta()
+        plan: dict = {}
+
+        def build(meta: dict) -> dict | None:
             snaps = meta["snapshots"]
             retained = snaps[-max(keep_last, 1):]
             # the current snapshot and every TAGGED snapshot are exempt
@@ -1074,16 +1046,10 @@ class IceTable:
             retained = [s for s in snaps if s["id"] in keep_ids]  # log order
             expired = [s for s in snaps if s["id"] not in keep_ids]
             if not expired and not clean_orphans:
-                return {
-                    "expired_snapshots": 0,
-                    "deleted_data_files": 0,
-                    "deleted_manifests": 0,
-                    "orphans_deleted": 0,
-                }
-            retained_ids = {s["id"] for s in retained}
+                return None
             keep_files: set[str] = set()
-            for sid in retained_ids:
-                fs, ds = self._read_snap(sid)
+            for s in retained:
+                fs, ds = self._read_snap(s["id"])
                 keep_files |= {e["path"] for e in fs + ds}
             drop_files: set[str] = set()
             for s in expired:
@@ -1152,70 +1118,75 @@ class IceTable:
                 a["summary"] = {
                     **a["summary"], "incremental_source_carried": inc,
                 }
-            new_meta = dict(meta)
-            new_meta["snapshots"] = retained
-            try:
-                self._commit(new_meta, expected_version=meta["_version"])
-            except CommitConflict:
-                continue  # a writer appended mid-expire: recompute
-            for p in sorted(drop_files):
-                with contextlib_suppress(OSError):
-                    os.remove(p)
-            dropped_manifests = 0
-            for s in expired:
-                # (expired ids are disjoint from keep_ids by
-                # construction, so every expired manifest is removable)
-                with contextlib_suppress(OSError):
-                    os.remove(
-                        os.path.join(self._meta_dir, f"snap-{s['id']}.json")
-                    )
-                    dropped_manifests += 1
-            orphans = 0
-            if clean_orphans:
-                now = time.time()
+            plan.update(
+                snaps=snaps, expired=expired,
+                keep_files=keep_files, drop_files=drop_files,
+            )
+            return {**meta, "snapshots": retained}
 
-                def _old(path: str) -> bool:
-                    try:
-                        return now - os.path.getmtime(path) >= orphan_grace_sec
-                    except OSError:
-                        return False
-
-                for name in sorted(os.listdir(self._data_dir)):
-                    p = os.path.join(self._data_dir, name)
-                    if p in keep_files or not name.endswith(".parquet"):
-                        continue
-                    if _old(p):
-                        with contextlib_suppress(OSError):
-                            os.remove(p)
-                            orphans += 1
-                # manifests of commit attempts that lost their race, and
-                # stranded .commit-* temps from crashed commits, are
-                # referenced by nothing in the snapshot log — sweep them
-                # past the same grace window (an IN-FLIGHT writer has
-                # written its manifest before its commit)
-                live_manifests = {f"snap-{s['id']}.json" for s in snaps}
-                for name in sorted(os.listdir(self._meta_dir)):
-                    stale_snap = (
-                        name.startswith("snap-")
-                        and name.endswith(".json")
-                        and name not in live_manifests
-                    )
-                    if not (stale_snap or name.startswith(".commit-")):
-                        continue
-                    mp = os.path.join(self._meta_dir, name)
-                    if _old(mp):
-                        with contextlib_suppress(OSError):
-                            os.remove(mp)
-                            orphans += 1
+        if self._commit_retrying("expire_snapshots", build) is None:
             return {
-                "expired_snapshots": len(expired),
-                "deleted_data_files": len(drop_files),
-                "deleted_manifests": dropped_manifests,
-                "orphans_deleted": orphans,
+                "expired_snapshots": 0,
+                "deleted_data_files": 0,
+                "deleted_manifests": 0,
+                "orphans_deleted": 0,
             }
-        raise CommitConflict(
-            f"expire lost {max_retries} commit races at {self.path}"
-        )
+        expired, keep_files = plan["expired"], plan["keep_files"]
+        for p in sorted(plan["drop_files"]):
+            with contextlib_suppress(OSError):
+                os.remove(p)
+        dropped_manifests = 0
+        for s in expired:
+            # (expired ids are disjoint from keep_ids by construction,
+            # so every expired manifest is removable)
+            with contextlib_suppress(OSError):
+                os.remove(
+                    os.path.join(self._meta_dir, f"snap-{s['id']}.json")
+                )
+                dropped_manifests += 1
+        orphans = 0
+        if clean_orphans:
+            now = time.time()
+
+            def _old(path: str) -> bool:
+                try:
+                    return now - os.path.getmtime(path) >= orphan_grace_sec
+                except OSError:
+                    return False
+
+            for name in sorted(os.listdir(self._data_dir)):
+                p = os.path.join(self._data_dir, name)
+                if p in keep_files or not name.endswith(".parquet"):
+                    continue
+                if _old(p):
+                    with contextlib_suppress(OSError):
+                        os.remove(p)
+                        orphans += 1
+            # manifests of commit attempts that lost their race, and
+            # stranded .commit-* temps from crashed commits, are
+            # referenced by nothing in the snapshot log — sweep them
+            # past the same grace window (an IN-FLIGHT writer has
+            # written its manifest before its commit)
+            live_manifests = {f"snap-{s['id']}.json" for s in plan["snaps"]}
+            for name in sorted(os.listdir(self._meta_dir)):
+                stale_snap = (
+                    name.startswith("snap-")
+                    and name.endswith(".json")
+                    and name not in live_manifests
+                )
+                if not (stale_snap or name.startswith(".commit-")):
+                    continue
+                mp = os.path.join(self._meta_dir, name)
+                if _old(mp):
+                    with contextlib_suppress(OSError):
+                        os.remove(mp)
+                        orphans += 1
+        return {
+            "expired_snapshots": len(expired),
+            "deleted_data_files": len(plan["drop_files"]),
+            "deleted_manifests": dropped_manifests,
+            "orphans_deleted": orphans,
+        }
 
     # ---------------- read path
 
@@ -1282,7 +1253,7 @@ class IceTable:
                 rows, "ref_name string, snapshot_id string"
             )
         if kind == "deletes":
-            entries = self._read_deletes(meta["current_snapshot_id"])
+            entries = self._read_snap(meta["current_snapshot_id"])[1]
             rows = [
                 (
                     e["path"],
@@ -1309,36 +1280,67 @@ class IceTable:
         release mechanism: ``graph-2026-08-18`` stays readable by name
         and is EXEMPT from keep-last history expiration until the tag is
         dropped). Defaults to the current snapshot."""
-        for _ in range(5):
-            meta = self._read_meta()
+
+        def build(meta: dict) -> dict:
             sid = snapshot_id or meta["current_snapshot_id"]
             if not any(s["id"] == sid for s in meta["snapshots"]):
                 raise KeyError(f"unknown snapshot {sid} at {self.path}")
-            new_meta = dict(meta)
-            new_meta["refs"] = {**meta.get("refs", {}), name: sid}
-            try:
-                self._commit(new_meta, expected_version=meta["_version"])
-                return sid
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"tag lost 5 commit races at {self.path}")
+            return {**meta, "refs": {**meta.get("refs", {}), name: sid}}
+
+        return self._commit_retrying("tag", build)["refs"][name]
 
     def drop_tag(self, name: str) -> None:
-        for _ in range(5):
-            meta = self._read_meta()
-            refs = dict(meta.get("refs", {}))
-            refs.pop(name, None)
-            new_meta = dict(meta)
-            new_meta["refs"] = refs
-            try:
-                self._commit(new_meta, expected_version=meta["_version"])
-                return
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"drop_tag lost 5 commit races at {self.path}")
+        def build(meta: dict) -> dict:
+            refs = {k: v for k, v in meta.get("refs", {}).items() if k != name}
+            return {**meta, "refs": refs}
+
+        self._commit_retrying("drop_tag", build)
 
     def refs(self) -> dict[str, str]:
         return dict(self._read_meta().get("refs", {}))
+
+    def _read_files(
+        self,
+        spark: SparkSession,
+        meta: dict,
+        entries: list[dict],
+        deletes: list[dict] | None = None,
+        filters: list[tuple] | None = None,
+        columns: list[str] | None = None,
+    ) -> tuple[DataFrame, list[dict]]:
+        """The one file reader behind every scan: prune ``entries`` by
+        their footer stats (plus filters derived through the partition
+        transforms), read the kept files with mergeSchema, apply the
+        equality ``deletes``, project to ``columns`` of the table schema
+        (default all) and re-apply ``filters`` to the rows. Returns
+        (DataFrame, kept entries)."""
+        filters = list(filters or [])
+        spec = [Transform.from_json(d) for d in meta["partition_spec"]]
+        prune_filters = filters + _derived_filters(filters, spec)
+        kept = [
+            e for e in entries
+            if all(
+                _file_may_match(e, c, op, v) for c, op, v in prune_filters
+            )
+        ]
+        schema = StructType.fromJson(meta["schema_json"])
+        out_cols = columns or schema.fieldNames()
+        unknown = [c for c in out_cols if c not in schema.fieldNames()]
+        if unknown:  # same error whether pruning kept files or not
+            raise KeyError(f"unknown columns {unknown} at {self.path}")
+        if not kept:
+            return spark.createDataFrame([], schema).select(*out_cols), kept
+        df = (
+            spark.read.option("mergeSchema", "true")
+            .parquet(*[e["path"] for e in kept])
+        )
+        df = _apply_equality_deletes(
+            spark, df, {e["path"]: e.get("seq", 0) for e in kept}, deletes
+        )
+        df = _project(df, schema, out_cols)
+        if filters:
+            df = df.filter(_residual_expr(filters))
+        return df, kept
 
     def scan(
         self,
@@ -1353,7 +1355,9 @@ class IceTable:
         {'=','<','<=','>','>=','in'}. Pruning is an optimization only:
         the same filters are re-applied to the rows, so a conservative
         keep is always correct. ``ref`` resolves a tag name to its
-        pinned snapshot. Returns (DataFrame, ScanReport)."""
+        pinned snapshot. Columns come out in the REQUESTED order; evolved-in
+        columns missing from old files read as null. Returns (DataFrame,
+        ScanReport)."""
         meta = self._read_meta()
         if ref is not None:
             if snapshot_id is not None:
@@ -1366,53 +1370,21 @@ class IceTable:
         if not any(s["id"] == sid for s in meta["snapshots"]):
             raise KeyError(f"unknown snapshot {sid} at {self.path}")
         entries, snap_deletes = self._read_snap(sid)
-        filters = list(filters or [])
-        spec = [Transform.from_json(d) for d in meta["partition_spec"]]
-        prune_filters = filters + _derived_filters(filters, spec)
-        kept = [
-            e for e in entries
-            if all(
-                _file_may_match(e, c, op, v) for c, op, v in prune_filters
-            )
-        ]
-        report = ScanReport(
-            snapshot_id=sid,
-            files_total=len(entries),
-            files_kept=len(kept),
-            records_total=sum(e["record_count"] for e in entries),
-            records_kept_bound=sum(e["record_count"] for e in kept),
+        df, kept = self._read_files(
+            spark, meta, entries, snap_deletes, filters, columns
         )
-        schema = StructType.fromJson(meta["schema_json"])
-        out_cols = columns or schema.fieldNames()
-        unknown = [c for c in out_cols if c not in schema.fieldNames()]
-        if unknown:  # same error whether pruning kept files or not
-            raise KeyError(f"unknown columns {unknown} at {self.path}")
-        if not kept:
-            empty = spark.createDataFrame([], schema).select(*out_cols)
-            return empty, report
-        df = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*[e["path"] for e in kept])
+        return df, ScanReport(sid, **_file_counts(entries, kept))
+
+    def _added(self, snap: dict) -> tuple[list[dict], list[dict]]:
+        """(data files, delete files) that snapshot ``snap`` added to its
+        parent's manifest."""
+        files, deletes = self._read_snap(snap["id"])
+        parent_files, parent_deletes = self._read_snap(snap["parent"])
+        seen = {e["path"] for e in parent_files + parent_deletes}
+        return (
+            [e for e in files if e["path"] not in seen],
+            [d for d in deletes if d["path"] not in seen],
         )
-        df = _apply_equality_deletes(
-            spark, df,
-            {e["path"]: e.get("seq", 0) for e in kept},
-            snap_deletes,
-        )
-        # project to the snapshot schema in the REQUESTED column order:
-        # hidden _p_* columns drop out, evolved-in columns missing from
-        # old files read as null
-        fields = {f.name: f for f in schema.fields}
-        proj = [
-            F.col(c).cast(fields[c].dataType)
-            if c in df.columns
-            else F.lit(None).cast(fields[c].dataType).alias(c)
-            for c in out_cols
-        ]
-        df = df.select(*proj)
-        if filters:
-            df = df.filter(_residual_expr(filters))
-        return df, report
 
     def _snapshot_chain(
         self, meta: dict, from_snapshot: str, to_sid: str
@@ -1500,55 +1472,17 @@ class IceTable:
             if s["operation"] == "replace":
                 replaces_skipped += 1
                 continue
-            parent_paths = {
-                e["path"] for e in self._read_manifest(s["parent"])
-            }
-            added.extend(
-                e for e in self._read_manifest(s["id"])
-                if e["path"] not in parent_paths
-            )
-        filters = list(filters or [])
-        spec = [Transform.from_json(d) for d in meta["partition_spec"]]
-        prune_filters = filters + _derived_filters(filters, spec)
-        kept = [
-            e for e in added
-            if all(
-                _file_may_match(e, c, op, v) for c, op, v in prune_filters
-            )
-        ]
+            added.extend(self._added(s)[0])
+        df, kept = self._read_files(
+            spark, meta, added, filters=filters, columns=columns
+        )
         report = IncrementalReport(
             from_snapshot=from_snapshot,
             to_snapshot=to_sid,
             appends=sum(1 for s in chain if s["operation"] == "append"),
             replaces_skipped=replaces_skipped,
-            files_total=len(added),
-            files_kept=len(kept),
-            records_total=sum(e["record_count"] for e in added),
-            records_kept_bound=sum(e["record_count"] for e in kept),
+            **_file_counts(added, kept),
         )
-        schema = StructType.fromJson(meta["schema_json"])
-        out_cols = columns or schema.fieldNames()
-        unknown = [c for c in out_cols if c not in schema.fieldNames()]
-        if unknown:
-            raise KeyError(f"unknown columns {unknown} at {self.path}")
-        if not kept:
-            empty = spark.createDataFrame([], schema).select(*out_cols)
-            return empty, report
-        df = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*[e["path"] for e in kept])
-        )
-        fields = {f.name: f for f in schema.fields}
-        df = df.select(
-            *[
-                F.col(c).cast(fields[c].dataType)
-                if c in df.columns
-                else F.lit(None).cast(fields[c].dataType).alias(c)
-                for c in out_cols
-            ]
-        )
-        if filters:
-            df = df.filter(_residual_expr(filters))
         return df, report
 
     def changelog_scan(
@@ -1595,17 +1529,11 @@ class IceTable:
                 f"{[s['id'] for s in bad]} at {self.path}"
             )
         schema = StructType.fromJson(meta["schema_json"])
-        fields = {f.name: f for f in schema.fields}
-        cols = schema.fieldNames()
 
         def _stamp(df: DataFrame, change: str, ordinal: int, sid: str):
+            # every input is already projected to the table schema
             return df.select(
-                *[
-                    F.col(c).cast(fields[c].dataType)
-                    if c in df.columns
-                    else F.lit(None).cast(fields[c].dataType).alias(c)
-                    for c in cols
-                ],
+                *schema.fieldNames(),
                 F.lit(change).alias("_change_type"),
                 F.lit(ordinal).alias("_change_ordinal"),
                 F.lit(sid).alias("_commit_snapshot_id"),
@@ -1616,41 +1544,21 @@ class IceTable:
             op, sid = s["operation"], s["id"]
             if op == "replace":
                 continue
+            added, new_dels = self._added(s)
             # a `merge` (upsert) emits BOTH: the rows its equality delete
             # scrubbed and the rows its data files added, same ordinal
-            if op in ("delete", "merge"):
-                parent_dpaths = {
-                    d["path"] for d in self._read_deletes(s["parent"])
-                }
-                new_dels = [
-                    d for d in self._read_deletes(sid)
-                    if d["path"] not in parent_dpaths
-                ]
-                if new_dels:
-                    key_cols = new_dels[0]["key_cols"]
-                    keys = (
-                        spark.read.parquet(*[d["path"] for d in new_dels])
-                        .select(*key_cols).dropDuplicates(key_cols)
-                    )
-                    visible, _ = self.scan(spark, snapshot_id=s["parent"])
-                    removed = visible.join(
-                        keys, on=key_cols, how="left_semi"
-                    )
-                    parts.append(_stamp(removed, "delete", ordinal, sid))
-            if op in ("append", "merge"):
-                parent_paths = {
-                    e["path"] for e in self._read_manifest(s["parent"])
-                }
-                added = [
-                    e for e in self._read_manifest(sid)
-                    if e["path"] not in parent_paths
-                ]
-                if added:
-                    df = (
-                        spark.read.option("mergeSchema", "true")
-                        .parquet(*[e["path"] for e in added])
-                    )
-                    parts.append(_stamp(df, "insert", ordinal, sid))
+            if op in ("delete", "merge") and new_dels:
+                key_cols = new_dels[0]["key_cols"]
+                keys = (
+                    spark.read.parquet(*[d["path"] for d in new_dels])
+                    .select(*key_cols).dropDuplicates(key_cols)
+                )
+                visible, _ = self.scan(spark, snapshot_id=s["parent"])
+                removed = visible.join(keys, on=key_cols, how="left_semi")
+                parts.append(_stamp(removed, "delete", ordinal, sid))
+            if op in ("append", "merge") and added:
+                df, _ = self._read_files(spark, meta, added)
+                parts.append(_stamp(df, "insert", ordinal, sid))
         if not parts:
             empty = spark.createDataFrame([], schema)
             return _stamp(empty, "insert", 0, to_sid).limit(0)
@@ -1683,18 +1591,45 @@ def _align_for_append(df: DataFrame, schema: StructType):
     ids into a long column) would commit fine and then poison every
     subsequent mergeSchema read of the table. Returns (aligned_df,
     new_schema)."""
-    have = set(df.columns)
-    cols = [
-        F.col(f.name).cast(f.dataType) if f.name in have
-        else F.lit(None).cast(f.dataType).alias(f.name)
-        for f in schema.fields
-    ]
-    new_schema = schema
-    for f in df.schema.fields:
-        if f.name not in new_schema.fieldNames():
-            cols.append(F.col(f.name))
-            new_schema = new_schema.add(f)
-    return df.select(*cols), new_schema
+    new_schema = _widened(schema, df.schema)
+    return _project(df, new_schema, new_schema.fieldNames()), new_schema
+
+
+def _file_counts(entries: list[dict], kept: list[dict]) -> dict:
+    """A scan report's file and record counts over ``entries``, of which
+    pruning ``kept`` some."""
+    return {
+        "files_total": len(entries),
+        "files_kept": len(kept),
+        "records_total": sum(e["record_count"] for e in entries),
+        "records_kept_bound": sum(e["record_count"] for e in kept),
+    }
+
+
+def _project(df: DataFrame, schema: StructType, cols: list[str]) -> DataFrame:
+    """``cols`` of the table ``schema``, in that order, read from ``df``:
+    each cast to the table's type, a column ``df`` lacks (evolved in
+    after its files were written) as null; anything else in ``df`` —
+    the hidden ``_p_*`` columns — drops out."""
+    types = {f.name: f.dataType for f in schema.fields}
+    return df.select(
+        *[
+            F.col(c).cast(types[c])
+            if c in df.columns
+            else F.lit(None).cast(types[c]).alias(c)
+            for c in cols
+        ]
+    )
+
+
+def _widened(schema: StructType, extra: StructType) -> StructType:
+    """``schema`` plus the columns of ``extra`` it lacks, in order: how
+    an append widens the table, and how a retried append or upsert keeps
+    the winner's columns and adds its own."""
+    names = set(schema.fieldNames())
+    return StructType(
+        schema.fields + [f for f in extra.fields if f.name not in names]
+    )
 
 
 def _apply_equality_deletes(
@@ -1792,7 +1727,7 @@ def publish_pipeline_tables(
         ("triples", output.triples, [bucket("subj", 16)], ["subj"]),
     ):
         path = os.path.join(root, name)
-        if os.path.exists(os.path.join(path, "metadata")):
+        if IceTable.exists(path):
             t = IceTable(path)
             t.overwrite(spark, df, target_files=target_files)
         else:

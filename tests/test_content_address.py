@@ -56,12 +56,17 @@ def test_canonical_json_udf_sorts_keys(spark):
 
 
 def test_analysis_sink_is_content_addressed_and_idempotent(spark, tmp_path):
-    from ner_app_spark.operators.extract import extract_phrases
+    from ner_app_spark.operators.extract import (
+        extract_phrases_and_triples,
+        fused_phrases,
+    )
     from ner_app_spark.plans.pipeline import analysis_sink, read_analysis
     from ner_app_spark.sources.pages import synth_pages_df
 
     out = str(tmp_path / "analysis")
-    phrases = extract_phrases(synth_pages_df(spark, 12), num_partitions=4)
+    phrases = fused_phrases(
+        extract_phrases_and_triples(synth_pages_df(spark, 12), num_partitions=4)
+    )
     first = analysis_sink(phrases, out).collect()
     assert first and all(r["written"] for r in first)
     # second run: identical ids, ZERO writes (the reference's resume

@@ -315,6 +315,31 @@ def test_publish_pipeline_tables(spark, tmp_path):
     assert rep.files_kept < rep.files_total
 
 
+def test_publish_after_crashed_create(spark, tmp_path):
+    """A create that crashed before committing v1 leaves a bare
+    ``metadata/`` dir. That is not a table: the next publish must create
+    it, not try to overwrite it."""
+    from types import SimpleNamespace
+
+    from ner_app_spark.tables.icelite import publish_pipeline_tables
+
+    root = str(tmp_path / "kg")
+    for name in ("nodes", "edges", "triples"):
+        os.makedirs(os.path.join(root, name, "metadata"))
+    out = SimpleNamespace(
+        nodes=spark.createDataFrame([(1, "n1")], "node_id long, text string"),
+        edges=spark.createDataFrame([(1, 1)], "src long, dst long"),
+        triples=spark.createDataFrame(
+            [("s", "p", "o")], "subj string, pred string, obj string"
+        ),
+    )
+    tables = publish_pipeline_tables(spark, out, root)
+    for name, t in tables.items():
+        assert IceTable.exists(t.path), name
+        assert t.scan(spark)[0].count() == 1
+        assert [s["operation"] for s in t.snapshots()] == ["create"]
+
+
 def test_metadata_is_plain_json(spark, events, tmp_path):
     """The format is inspectable: metadata + manifests are valid JSON with
     the documented shape (judge/debug surface, mirrors the spec)."""
@@ -1192,3 +1217,141 @@ def test_compact_purges_upserted_away_rows(spark, events, tmp_path):
     after, _ = t.scan(spark)
     assert after.count() == 600
     assert after.filter(F.col("event_id") == 0).collect()[0].user_id == "uZ"
+
+
+# --------------------------------------------- the shared commit-retry loop
+
+
+def _shifted(spark, n, offset):
+    return _events(spark, n=n).withColumn(
+        "event_id", F.col("event_id") + offset
+    )
+
+
+#: op -> (setup, run, check) for each of the eight writers. ``setup``
+#: runs before the race is armed, ``run`` is the racing write, and
+#: ``check`` sees the table after a rival append of 5 rows (event_id
+#: 50_000+, a new ``note`` column) won the writer's first commit.
+_WRITERS = {
+    "append": (
+        None,
+        lambda spark, t: t.append(
+            spark, _shifted(spark, 7, 10_000).withColumn("extra", F.lit(1))
+        ),
+        lambda spark, t: (
+            t.scan(spark)[0].count() == 612
+            # the winner's column is kept and the append's own is added
+            and {"note", "extra"} <= set(t.scan(spark)[0].columns)
+        ),
+    ),
+    "overwrite": (
+        None,
+        lambda spark, t: t.overwrite(spark, _shifted(spark, 7, 10_000)),
+        lambda spark, t: t.scan(spark)[0].count() == 7,
+    ),
+    "delete": (
+        None,
+        lambda spark, t: t.delete(
+            spark, _events(spark).filter(F.col("event_id") < 100)
+            .select("event_id")
+        ),
+        lambda spark, t: t.scan(spark)[0].count() == 600 - 100 + 5,
+    ),
+    "upsert": (
+        None,
+        lambda spark, t: t.upsert(
+            spark,
+            _events(spark, n=10).withColumn("amount", F.lit(-1.0)),
+            key_cols=["event_id"],
+        ),
+        lambda spark, t: (
+            t.scan(spark)[0].count() == 605
+            and t.scan(spark, filters=[("amount", "=", -1.0)])[0].count() == 10
+        ),
+    ),
+    "compact": (
+        None,
+        lambda spark, t: t.compact(spark),
+        lambda spark, t: (
+            t.scan(spark)[0].count() == 605
+            and t.snapshots()[-1]["operation"] == "replace"
+        ),
+    ),
+    "expire_snapshots": (
+        lambda spark, t: t.append(spark, _shifted(spark, 10, 20_000)),
+        lambda spark, t: t.expire_snapshots(keep_last=1),
+        lambda spark, t: (
+            len(t.snapshots()) == 1 and t.scan(spark)[0].count() == 615
+        ),
+    ),
+    "tag": (
+        None,
+        lambda spark, t: t.tag("v1"),
+        lambda spark, t: t.refs() == {"v1": t.current_snapshot_id()},
+    ),
+    "drop_tag": (
+        lambda spark, t: t.tag("v1"),
+        lambda spark, t: t.drop_tag("v1"),
+        lambda spark, t: t.refs() == {},
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_WRITERS))
+def test_writer_retries_after_losing_first_commit(
+    spark, events, tmp_path, monkeypatch, op
+):
+    """Each writer's first claim loses to a rival append that commits in
+    between; the writer must land on its second attempt, rebuilt against
+    the winner."""
+    setup, run, check = _WRITERS[op]
+    t = IceTable.create(spark, str(tmp_path / "t"), events, target_files=2)
+    if setup:
+        setup(spark, t)
+    orig = IceTable._commit
+    rival = _shifted(spark, 5, 50_000).withColumn("note", F.lit("rival"))
+    state = {"armed": True, "in_rival": False}
+    attempts: list[str] = []
+
+    def racing(self, meta, expected_version):
+        if state["in_rival"]:
+            return orig(self, meta, expected_version)
+        if state["armed"]:
+            state.update(armed=False, in_rival=True)
+            try:
+                IceTable(self.path).append(spark, rival)
+            finally:
+                state["in_rival"] = False
+        try:
+            v = orig(self, meta, expected_version)
+        except CommitConflict:
+            attempts.append("lost")
+            raise
+        attempts.append("won")
+        return v
+
+    monkeypatch.setattr(IceTable, "_commit", racing)
+    run(spark, t)
+    monkeypatch.undo()
+    assert attempts == ["lost", "won"]
+    assert check(spark, t)
+
+
+@pytest.mark.parametrize("op", sorted(_WRITERS))
+def test_writer_losing_every_race_names_its_op(
+    spark, events, tmp_path, monkeypatch, op
+):
+    setup, run, _ = _WRITERS[op]
+    t = IceTable.create(spark, str(tmp_path / "t"), events, target_files=2)
+    if setup:
+        setup(spark, t)
+    orig = IceTable._commit
+
+    def always_beaten(self, meta, expected_version):
+        # a rival re-commits the current metadata into the claimed slot
+        orig(self, self._read_meta(), expected_version)
+        return orig(self, meta, expected_version)
+
+    monkeypatch.setattr(IceTable, "_commit", always_beaten)
+    with pytest.raises(CommitConflict, match=f"^{op} lost 5 commit races"):
+        run(spark, t)

@@ -9,9 +9,9 @@ import pytest
 
 from ner_app_spark import oracle, synth
 from ner_app_spark.operators.extract import (
-    extract_phrases,
     extract_phrases_and_triples,
     extracted_text,
+    fused_phrases,
     fused_triples,
 )
 from ner_app_spark.sources.pages import synth_pages_df
@@ -63,7 +63,9 @@ def test_extracted_text_byte_identical(spark, pages):
 def test_phrases_match_oracle_exactly(spark, pages, golden):
     got = {
         (r["url"], r["phrase"], r["type"], r["tfidf"], r["length"], r["head_noun"])
-        for r in extract_phrases(pages, num_partitions=4).collect()
+        for r in fused_phrases(
+            extract_phrases_and_triples(pages, num_partitions=4)
+        ).collect()
     }
     assert got == golden["phrases"]
 

@@ -52,10 +52,15 @@ def test_linking_is_single_arrow_stage(spark):
     scheduling floor."""
     from ner_app_spark.operators.linking import link_mentions
     from ner_app_spark.sources.pages import alias_dict_df, synth_pages_df
-    from ner_app_spark.operators.extract import extract_phrases
+    from ner_app_spark.operators.extract import (
+        extract_phrases_and_triples,
+        fused_phrases,
+    )
 
     df = link_mentions(
-        extract_phrases(synth_pages_df(spark, 8), num_partitions=4),
+        fused_phrases(
+            extract_phrases_and_triples(synth_pages_df(spark, 8), num_partitions=4)
+        ),
         alias_dict_df(spark),
     )
     plan = _physical(df)
@@ -74,21 +79,18 @@ def test_pricing_summary_has_partial_aggregation(spark):
 
 
 def test_extract_phrases_single_explicit_shuffle(spark):
-    """The phrase-only stage and the fused phrase+triple stage (the
-    shipped triple path) each plan exactly one exchange: the explicit
-    url-hash repartition. mapInPandas and the triple split add none."""
+    """The fused phrase+triple stage (the shipped phrase and triple
+    path) plans exactly one exchange: the explicit url-hash repartition.
+    mapInPandas and the phrase and triple splits add none."""
     from ner_app_spark.operators.extract import (
-        extract_phrases,
         extract_phrases_and_triples,
+        fused_phrases,
         fused_triples,
     )
     from ner_app_spark.sources.pages import synth_pages_df
 
-    pages = synth_pages_df(spark, 8)
-    for df in (
-        extract_phrases(pages, num_partitions=4),
-        fused_triples(extract_phrases_and_triples(pages, num_partitions=4)),
-    ):
+    fused = extract_phrases_and_triples(synth_pages_df(spark, 8), num_partitions=4)
+    for df in (fused_phrases(fused), fused_triples(fused)):
         plan = _physical(df)
         assert plan.count("Exchange") == 1
         assert "xxhash64" in plan

@@ -99,7 +99,10 @@ def test_pipeline_matches_oracle_on_real_fixture(spark):
     """The distributed path (mapInPandas extract) must produce the exact
     oracle phrase multiset on real Russian input — same gate as the
     synthetic corpus, now on reference data."""
-    from ner_app_spark.operators.extract import extract_phrases
+    from ner_app_spark.operators.extract import (
+        extract_phrases_and_triples,
+        fused_phrases,
+    )
     from ner_app_spark.session import local_df
 
     text = _read("redhead.txt")
@@ -110,7 +113,9 @@ def test_pipeline_matches_oracle_on_real_fixture(spark):
     )
     got = {
         (r["phrase"], r["type"], round(r["tfidf"], 9))
-        for r in extract_phrases(pages, num_partitions=2).collect()
+        for r in fused_phrases(
+            extract_phrases_and_triples(pages, num_partitions=2)
+        ).collect()
     }
     want = {(p.phrase, p.type, round(p.tfidf, 9)) for p in analyze(text)}
     assert got == want

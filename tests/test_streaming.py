@@ -525,3 +525,39 @@ def test_continuous_trigger_processes_late_arrivals(spark, scratch):
     )
     assert n_batches >= 2  # the late file was picked up continuously
     assert res.count() > 0
+
+
+def test_stream_analyzes_extracted_html_like_the_batch_job(spark, scratch):
+    """The stream runs the batch job's text extraction: pages whose raw
+    ``text`` column is empty or differs from their html must yield the
+    same triples as run_pipeline, which analyzes extracted_text(html)."""
+    from ner_app_spark.plans.pipeline import run_pipeline
+    from ner_app_spark.sources.pages import synth_pages_df
+
+    bucket = F.crc32(F.col("url")) % 3
+    pages = synth_pages_df(spark, 24).withColumn(
+        "text",
+        F.when(bucket == 0, F.lit(""))
+        .when(
+            bucket == 1,
+            F.concat("text", F.lit(" Красная шапочка пошла в густой лес.")),
+        )
+        .otherwise(F.col("text")),
+    )
+    blanked = {r.url for r in pages.filter(F.col("text") == "").collect()}
+    out = run_pipeline(spark, pages, n_parts=4)
+    try:
+        want = sorted(map(tuple, out.triples.select(
+            "url", "subj", "pred", "obj").collect()))
+    finally:
+        out.cleanup()
+    assert blanked & {t[0] for t in want}  # the raw text would lose these
+
+    inp, sink, ckpt = f"{scratch}/in", f"{scratch}/sink", f"{scratch}/ckpt"
+    add_chunk(pages.filter(F.crc32(F.col("url")) % 2 == 0), inp, 0)
+    add_chunk(pages.filter(F.crc32(F.col("url")) % 2 == 1), inp, 1)
+    stream_kg_triples(
+        spark, inp, sink, ckpt, schema=pages.schema, num_partitions=2
+    ).awaitTermination()
+    got = sorted(map(tuple, triples_result(spark, sink).collect()))
+    assert got == want
