@@ -4,15 +4,17 @@
     cd /root/repo && zip -qr /tmp/ner_app_spark.zip ner_app_spark
     spark-submit --master local[32] --py-files /tmp/ner_app_spark.zip \
         jobs/run_stream.py --input /data/pages_landing \
-        --sink /tmp/kg_stream_out --checkpoint /tmp/kg_stream_ckpt
+        --table /tmp/kg_stream_triples --checkpoint /tmp/kg_stream_ckpt
 
 Watches a parquet landing directory for arriving page files and runs the
-fused extract+triples stage per micro-batch (streaming/pipeline.py) into
-an idempotent batch-keyed sink. `--available-now` drains what is present
-and exits (the cron/backfill shape); without it the query runs
-continuously. A killed job relaunched with the same `--checkpoint`
-resumes from the committed source offsets — already-processed files are
-never reprocessed (pinned in tests/test_streaming.py).
+batch job's text extraction and fused extract+triples stage per
+micro-batch (streaming/icesink.py), committing each micro-batch's
+triples exactly once into the snapshot (icelite) table `--table`.
+`--available-now` drains what is present and exits (the cron/backfill
+shape); without it the query runs continuously. A killed job relaunched
+with the same `--checkpoint` resumes from the committed source offsets
+— already-processed files are never reprocessed, and a replayed batch
+is skipped by the table's watermark (pinned in tests/test_streaming.py).
 
 With `--synth N` (no `--input`), N deterministic pages are staged into a
 scratch landing dir as `--chunks` files first — the hermetic smoke shape.
@@ -22,7 +24,9 @@ from __future__ import annotations
 
 import argparse
 import json
+import shutil
 import sys
+import tempfile
 import time
 
 
@@ -32,10 +36,9 @@ def main() -> int:
     ap.add_argument("--synth", type=int, default=0,
                     help="stage N synthetic pages as the landing dir")
     ap.add_argument("--chunks", type=int, default=4)
-    ap.add_argument("--sink", help="batch-keyed parquet sink directory")
-    ap.add_argument("--table", help="land in a snapshot (icelite) triples "
-                    "table instead of a batch-keyed parquet sink — "
-                    "exactly-once via commit markers in the snapshot log")
+    ap.add_argument("--table", required=True,
+                    help="snapshot (icelite) triples table to land in — "
+                    "exactly-once via a watermark in the snapshot log")
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--parts", type=int, default=8)
     ap.add_argument("--lang", default="ru")
@@ -49,73 +52,57 @@ def main() -> int:
                     help="with --no-available-now: stop the query after "
                     "this many seconds (0 = run until killed)")
     args = ap.parse_args()
-    if bool(args.sink) == bool(args.table):
-        ap.error("exactly one of --sink / --table is required")
 
     from ner_app_spark.session import get_session, scratch_base
     from ner_app_spark.sources.pages import synth_pages_df
     from ner_app_spark.streaming import (
         stage_chunks,
-        stream_kg_triples,
         stream_kg_triples_to_table,
         table_triples_result,
-        triples_result,
     )
+    from ner_app_spark.tables.icelite import IceTable
 
     spark = get_session(app_name="kg-stream")
     t0 = time.monotonic()
-    if args.input:
-        input_dir = args.input
-        schema = spark.read.parquet(input_dir).schema
-    else:
-        import tempfile
+    landing = None
+    try:
+        if args.input:
+            input_dir = args.input
+            schema = spark.read.parquet(input_dir).schema
+        else:
+            input_dir = landing = tempfile.mkdtemp(
+                prefix="kg_stream_landing_", dir=scratch_base()
+            )
+            pages = synth_pages_df(spark, args.synth or 200)
+            stage_chunks(pages, input_dir, "url", args.chunks)
+            schema = pages.schema
 
-        input_dir = tempfile.mkdtemp(
-            prefix="kg_stream_landing_", dir=scratch_base()
+        q = stream_kg_triples_to_table(
+            spark,
+            input_dir,
+            args.table,
+            args.checkpoint,
+            schema=schema,
+            lang=args.lang,
+            num_partitions=args.parts,
+            max_files_per_trigger=args.max_files_per_trigger,
+            available_now=args.available_now,
         )
-        pages = synth_pages_df(spark, args.synth or 200)
-        stage_chunks(pages, input_dir, "url", args.chunks)
-        schema = pages.schema
-
-    sink_fn, result_fn, dest = (
-        (stream_kg_triples, triples_result, args.sink)
-        if args.sink
-        else (stream_kg_triples_to_table, table_triples_result, args.table)
-    )
-    q = sink_fn(
-        spark,
-        input_dir,
-        dest,
-        args.checkpoint,
-        schema=schema,
-        lang=args.lang,
-        num_partitions=args.parts,
-        max_files_per_trigger=args.max_files_per_trigger,
-        available_now=args.available_now,
-    )
-    if args.available_now:
+        if not args.available_now and args.run_for_sec > 0:
+            q.awaitTermination(args.run_for_sec)
+            q.stop()
         q.awaitTermination()
-    elif args.run_for_sec > 0:
-        q.awaitTermination(args.run_for_sec)
-        q.stop()
-        q.awaitTermination()
-    else:
-        q.awaitTermination()
-    n = result_fn(spark, dest).count()
-    if not args.input:
-        import shutil
-
-        shutil.rmtree(input_dir, ignore_errors=True)
+        n = table_triples_result(spark, args.table).count()
+    finally:
+        if landing:
+            shutil.rmtree(landing, ignore_errors=True)
     wall = round(time.monotonic() - t0, 3)
     out = {
         "wall_sec": wall,
         "triples": n,
         "triples_per_sec": round(n / wall, 2),
+        "snapshots": len(IceTable(args.table).snapshots()),
     }
-    if args.table:
-        from ner_app_spark.tables.icelite import IceTable
-
-        out["snapshots"] = len(IceTable(args.table).snapshots())
     print(json.dumps(out))
     spark.stop()
     return 0

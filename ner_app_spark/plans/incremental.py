@@ -6,15 +6,16 @@ newest 10^9 — this plan instead consumes ONLY the pages appended since
 the last run, using ``IceTable.incremental_scan``:
 
     pages table (icelite) --incremental_scan--> extract (mapInPandas)
-        --> append to `phrases` table   [marker: consumed pages snapshot]
-        --> append to `triples` table   [marker: consumed pages snapshot]
+        --> append to `phrases` table   [watermark: consumed pages snapshot]
+        --> append to `triples` table   [watermark: consumed pages snapshot]
 
 Exactly-once, the same device as the streaming sink (streaming/icesink.py):
-each output append stamps the consumed pages-table snapshot id into its
-OWN atomic snapshot commit (``summary_extra``). A crash anywhere — before
-either append, between the two appends — leaves each output table with a
-truthful high-water mark; the next run reads each table's marker and
-catches it up independently. No offsets live outside the tables.
+each output append stamps the consumed pages-table snapshot id as an
+icelite watermark (``summary_extra``) into its OWN atomic snapshot
+commit. A crash anywhere — before either append, between the two
+appends — leaves each output table with a truthful high-water mark; the
+next run reads each table's watermark and catches it up independently.
+No offsets live outside the tables.
 
 Only the DOC-LOCAL stages are incremental: extract → phrases → triples
 (each page's rows depend on that page alone) and per-occurrence entity
@@ -32,7 +33,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from ..operators.extract import (
     extract_phrases_and_triples,
@@ -44,25 +45,14 @@ from ..operators.linking import link_mentions, link_occurrences
 from ..sources.pages import alias_dict_df
 from ..tables.icelite import IceTable
 
-#: snapshot-summary key stamped on every incremental append: the pages
-#: snapshot id whose data is fully contained in this output snapshot
+#: watermark key stamped on every incremental append: the pages snapshot
+#: id whose data is fully contained in this output snapshot
 MARKER = "incremental_source"
-#: key expire_snapshots uses to preserve an expired marker (anchored on
-#: the first RETAINED snapshot after the expired one, so log order —
-#: and with it "which marker is newest" — survives history expiry)
-CARRIED = MARKER + "_carried"
 
 
 def last_consumed_snapshot(table: IceTable) -> str | None:
-    """The pages snapshot id this output table has fully consumed: the
-    newest (log-order) marker, a snapshot's own stamp beating the carried
-    stamp anchored at the same position (the carried value predates the
-    anchor snapshot by construction)."""
-    for s in reversed(table.snapshots()):
-        v = s["summary"].get(MARKER) or s["summary"].get(CARRIED)
-        if v:
-            return v
-    return None
+    """The pages snapshot id this output table has fully consumed."""
+    return table.watermark(MARKER)
 
 
 def run_incremental(
@@ -89,11 +79,7 @@ def run_incremental(
         for name in ("phrases", "triples", "links")
     }
     froms = {
-        name: (
-            last_consumed_snapshot(IceTable(path))
-            if IceTable.exists(path)
-            else None
-        )
+        name: last_consumed_snapshot(IceTable(path))
         for name, path in out_paths.items()
     }
     counters: dict = {
@@ -114,7 +100,7 @@ def run_incremental(
             inc, _ = pages_t.scan(spark, snapshot_id=to_sid)
         else:
             # an empty increment still flows through: the append below
-            # may add zero rows but MUST advance the marker, or every
+            # may add zero rows but MUST advance the watermark, or every
             # later run would re-extract the same range
             inc, _ = pages_t.incremental_scan(
                 spark, from_snapshot=from_sid, to_snapshot=to_sid

@@ -885,23 +885,27 @@ def q_streaming_window_counts(spark, sf_dir):
 @_eager_once
 def q_streaming_triples(spark, sf_dir):
     """Incremental KG construction: the fused extract+triples Arrow stage
-    run per micro-batch via foreachBatch with an idempotent batch-keyed
-    parquet sink (streaming/pipeline.py). Triples are per-document local,
-    so the union over batches equals the batch kg_triples answer — the
-    oracle IS the kg_triples DuckDB replay."""
+    run per micro-batch via foreachBatch, committed exactly once into a
+    snapshot (icelite) table (streaming/icesink.py). Triples are
+    per-document local, so the union over batches equals the batch
+    kg_triples answer — the oracle IS the kg_triples DuckDB replay."""
     import shutil
 
-    from .streaming import stage_chunks, stream_kg_triples, triples_result
+    from .streaming import (
+        stage_chunks,
+        stream_kg_triples_to_table,
+        table_triples_result,
+    )
 
     pages = _pages_for(spark, sf_dir)
     base = _stream_scratch()
     try:
-        inp, sink, ckpt = f"{base}/in", f"{base}/sink", f"{base}/ckpt"
+        inp, table, ckpt = f"{base}/in", f"{base}/table", f"{base}/ckpt"
         stage_chunks(pages, inp, "url", 4)
-        stream_kg_triples(
-            spark, inp, sink, ckpt, schema=pages.schema
+        stream_kg_triples_to_table(
+            spark, inp, table, ckpt, schema=pages.schema
         ).awaitTermination()
-        return triples_result(spark, sink).localCheckpoint(eager=True)
+        return table_triples_result(spark, table).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 

@@ -24,7 +24,6 @@ DEFAULT_CONF = {
     # amortize per-batch Python overhead, small enough to bound memory.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
     # Task-memory page size: the default scales with heap (~28 MB pages
     # at 24g/32 cores) and every hash-agg/sort task zeroes whole pages —
     # measured 6-8x slowdown from allocation churn with many concurrent
@@ -43,7 +42,23 @@ DEFAULT_CONF = {
 
 
 def cpu_count() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local-mode task slots: ``SPARK_GRAFT_CPUS`` if set, else the CPUs
+    this process may run on."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    n = int(raw) if raw else len(os.sched_getaffinity(0))
+    if n < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be >= 1, got {raw!r}")
+    return n
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` if set, else
+    half of physical RAM, capped at 24g."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2, 24 << 30) >> 20}m"
 
 
 def local_df(spark: SparkSession, rows: list, schema: str):
@@ -198,6 +213,7 @@ def get_session(
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)
+    conf["spark.driver.memory"] = driver_memory()
     # local-mode shuffle files on tmpfs: /tmp sits on a slow virtio disk
     # here, and shuffle-block mmap/write syscalls serialize under many
     # task threads (measured: anti-scaling local[8] -> local[32]). On a

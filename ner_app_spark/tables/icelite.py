@@ -628,8 +628,8 @@ class IceTable:
             e["seq"] = 0
         sid = t._write_manifest(entries)
         entry = t._snap_entry(sid, None, "create", entries, entries)
-        if summary_extra:  # e.g. a streaming sink's commit marker — must
-            entry["summary"].update(summary_extra)  # ride the ONE commit
+        if summary_extra:  # watermark stamps ride the ONE commit
+            entry["summary"].update(summary_extra)
         meta = {
             "format": _FMT,
             "schema_json": json.loads(df.schema.json()),
@@ -734,9 +734,10 @@ class IceTable:
         manifest merge retries against the winner, whose schema is widened
         with this append's new columns — the data files were written once
         and are reused verbatim. ``summary_extra`` merges into the
-        snapshot's summary — the hook a streaming sink uses to stamp its
-        (checkpoint, batch_id) commit marker (Iceberg stores the same
-        thing in snapshot summary properties)."""
+        snapshot's summary: each key is a watermark stamp, recording in
+        the same atomic commit what the writer has consumed (Iceberg
+        stores the same thing in snapshot summary properties); read it
+        back with :meth:`watermark`."""
         meta = self._read_meta()
         spec = [Transform.from_json(d) for d in meta["partition_spec"]]
         schema = StructType.fromJson(meta["schema_json"])
@@ -1032,6 +1033,10 @@ class IceTable:
         IN-FLIGHT append has already written its data files before its
         commit (exactly why real Iceberg's remove_orphan_files takes an
         age threshold).
+
+        A watermark stamp whose newest holder expires moves into the
+        current snapshot's ``carried`` summary field, so
+        :meth:`watermark` reads the same value afterwards.
         """
         plan: dict = {}
 
@@ -1056,67 +1061,21 @@ class IceTable:
                 fs, ds = self._read_snap(s["id"])
                 drop_files |= {e["path"] for e in fs + ds}
             drop_files -= keep_files
-            # carry streaming commit markers forward: expired snapshots
-            # may hold the (checkpoint, batch-id) stamps a streaming sink
-            # uses for exactly-once replay detection (icesink.py). Batch
-            # ids are monotone per checkpoint, so a {key: max_id} dict on
-            # the oldest retained snapshot preserves the full guarantee
-            # in O(#checkpoints) space.
-            carried: dict[str, int] = {}
-
-            def _absorb(summary: dict) -> None:
-                marker = summary.get("streaming_commit", "")
-                key, _, bid = marker.rpartition(":")
-                if key:
-                    carried[key] = max(carried.get(key, -1), int(bid))
-                for k, v in summary.get(
-                    "streaming_commits_carried", {}
-                ).items():
-                    carried[k] = max(carried.get(k, -1), int(v))
-
-            for s in expired:
-                _absorb(s["summary"])
-            retained = [dict(s) for s in retained]
-            if carried:
-                _absorb(retained[0]["summary"])
-                retained[0]["summary"] = {
-                    **retained[0]["summary"],
-                    "streaming_commits_carried": carried,
-                }
-            # carry incremental-ingestion high-water marks the same way
-            # (plans/incremental.py): an expired snapshot's marker moves
-            # to the FIRST retained snapshot after it in log order, so
-            # "newest marker wins" still resolves correctly even when
-            # tag-pinned snapshots leave holes in the retained history
-            pos = {s["id"]: i for i, s in enumerate(snaps)}
-            ret_pos = sorted((pos[s["id"]], i) for i, s in enumerate(retained))
-            set_this_pass: set[int] = set()
-            for s in expired:  # log order: later absorptions are newer
-                inc = s["summary"].get("incremental_source") or s[
-                    "summary"
-                ].get("incremental_source_carried")
-                if not inc:
-                    continue
-                anchor = next(
-                    (i for p, i in ret_pos if p > pos[s["id"]]), None
-                )
-                if anchor is None:  # current is always last and retained
-                    continue
-                a = retained[anchor]
-                # an anchor's own marker is newer than anything before
-                # it; a PRE-EXISTING carried value always originates
-                # later in the log than a snapshot expiring in a LATER
-                # pass (else that pass's anchor would have been earlier)
-                # — both win over this absorption. Within this pass,
-                # later-position absorptions overwrite earlier ones.
-                if "incremental_source" in a["summary"] or (
-                    "incremental_source_carried" in a["summary"]
-                    and anchor not in set_this_pass
-                ):
-                    continue
-                set_this_pass.add(anchor)
-                a["summary"] = {
-                    **a["summary"], "incremental_source_carried": inc,
+            # a watermark key whose newest holder expires moves into the
+            # current snapshot's ``carried`` field: current is last in the
+            # log and always retained, so "newest wins" reads the same
+            newest: dict = {}
+            for s in snaps:
+                for k, v in _stamps(s["summary"]).items():
+                    newest[k] = (s["id"], v)
+            carry = {
+                k: v for k, (sid, v) in newest.items() if sid not in keep_ids
+            }
+            if carry:
+                cur = retained[-1]
+                carried = {**cur["summary"].get("carried", {}), **carry}
+                retained[-1] = {
+                    **cur, "summary": {**cur["summary"], "carried": carried}
                 }
             plan.update(
                 snaps=snaps, expired=expired,
@@ -1192,6 +1151,19 @@ class IceTable:
 
     def snapshots(self) -> list[dict]:
         return self._read_meta()["snapshots"]
+
+    def watermark(self, key: str):
+        """The newest value stamped under ``key`` (``summary_extra`` of
+        create/append) in snapshot-log order, whether the snapshot's own
+        stamp or one expire_snapshots carried onto it; None if no
+        snapshot holds one or the table does not exist yet."""
+        if not IceTable.exists(self.path):
+            return None
+        for s in reversed(self.snapshots()):
+            stamps = _stamps(s["summary"])
+            if key in stamps:
+                return stamps[key]
+        return None
 
     def metadata_df(self, spark: SparkSession, kind: str) -> DataFrame:
         """Queryable metadata tables, like Iceberg's ``table.snapshots``
@@ -1593,6 +1565,19 @@ def _align_for_append(df: DataFrame, schema: StructType):
     new_schema)."""
     new_schema = _widened(schema, df.schema)
     return _project(df, new_schema, new_schema.fieldNames()), new_schema
+
+
+#: summary keys icelite writes itself; any other key is a watermark stamp
+_OWN_SUMMARY_KEYS = {
+    "added_files", "added_records", "total_files", "total_records",
+    "delete_files", "deleted_key_records", "upsert_keys", "rewritten_files",
+}
+
+
+def _stamps(summary: dict) -> dict:
+    """A snapshot's watermark stamps, carried ones included."""
+    own = {k: v for k, v in summary.items() if k not in _OWN_SUMMARY_KEYS}
+    return {**own.pop("carried", {}), **own}
 
 
 def _file_counts(entries: list[dict], kept: list[dict]) -> dict:

@@ -783,6 +783,42 @@ def test_tags_pin_snapshots_through_expiry(spark, events, tmp_path):
     assert t.refs() == {}
 
 
+def test_watermark_carry_keeps_newest_value_across_expiries(
+    spark, tmp_path
+):
+    """One carry rule for every watermark key: when a key's newest holder
+    expires, its value moves onto the current snapshot. An older stamp
+    on a tag-pinned snapshot must not win back, and a key whose newest
+    holder is retained is not carried at all."""
+    def rows(lo):
+        return spark.range(lo, lo + 10)
+
+    # S1..S3 stamp K; S2 (tagged) holds an older K plus J; S4 is current
+    t = IceTable.create(spark, str(tmp_path / "t"), rows(0), target_files=1,
+                        summary_extra={"K": 1})
+    t.append(spark, rows(10), target_files=1,
+             summary_extra={"K": 0, "J": "j2"})
+    t.tag("pin")
+    s2 = t.current_snapshot_id()
+    t.append(spark, rows(20), target_files=1, summary_extra={"K": 3})
+    assert t.compact(spark) is not None
+    assert t.watermark("K") == 3 and t.watermark("J") == "j2"
+    assert t.watermark("absent") is None
+
+    assert t.expire_snapshots(keep_last=1)["expired_snapshots"] == 2
+    snaps = t.snapshots()
+    assert [s["id"] for s in snaps] == [s2, t.current_snapshot_id()]
+    assert snaps[-1]["summary"]["carried"] == {"K": 3}  # J not carried
+    assert t.watermark("K") == 3 and t.watermark("J") == "j2"
+
+    t.append(spark, rows(30), target_files=1)
+    t.expire_snapshots(keep_last=1)
+    assert len(t.snapshots()) == 2
+    assert t.snapshots()[-1]["summary"]["carried"] == {"K": 3}
+    assert t.watermark("K") == 3 and t.watermark("J") == "j2"
+    assert t.scan(spark)[0].count() == 40
+
+
 def test_refs_metadata_table(spark, events, tmp_path):
     t = IceTable.create(spark, str(tmp_path / "t"), events, target_files=1)
     assert t.metadata_df(spark, "refs").count() == 0

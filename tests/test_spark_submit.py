@@ -144,20 +144,6 @@ def test_run_ner_via_spark_submit_with_artifact_store(pyfiles_zip, tmp_path):
     assert os.path.isdir(outdir)
 
 
-def test_run_stream_via_spark_submit(pyfiles_zip, tmp_path):
-    """The incremental (streaming) launch surface: same 60-page corpus
-    drained as 3 micro-batches via availableNow must land exactly the
-    batch pipeline's triples."""
-    got = _submit(
-        pyfiles_zip, "run_stream.py",
-        "--synth", str(N_PAGES), "--chunks", "3",
-        "--sink", str(tmp_path / "sink"),
-        "--checkpoint", str(tmp_path / "ckpt"),
-        "--parts", "4",
-    )
-    assert got["triples"] == N_TRIPLES
-
-
 def test_run_maintenance_via_spark_submit(pyfiles_zip, tmp_path, spark):
     """The maintenance launch surface: publish the graph twice (two
     overwrite snapshots per table), then run the compaction+expiration
@@ -447,12 +433,16 @@ def test_operational_jobs_via_spark_submit(pyfiles_zip, tmp_path, spark):
     )
     assert wg["n_hosts"] == 50 and wg["n_edges"] > 0
 
+    # the same 60-page corpus as entry(), drained as 3 micro-batches into
+    # a snapshot table: the batch pipeline's triples, one snapshot each
     st = _submit(
         pyfiles_zip, "run_stream.py",
-        "--synth", "60", "--chunks", "3", "--sink", f"{root}/stream_sink",
+        "--synth", str(N_PAGES), "--chunks", "3",
+        "--table", f"{root}/stream_triples",
         "--checkpoint", f"{root}/stream_ckpt", "--parts", "4",
     )
-    assert st["triples"] == N_TRIPLES  # same 60-page corpus as entry()
+    assert st["triples"] == N_TRIPLES
+    assert st["snapshots"] == 3
 
 
 def test_run_webgraph_frontier_flag(pyfiles_zip, tmp_path, spark):

@@ -21,10 +21,11 @@ from ner_app_spark.session import scratch_base
 from ner_app_spark.streaming import (
     first_seen_result,
     stage_chunks,
-    stream_kg_triples,
+    stream_kg_triples_to_table,
     streaming_first_seen,
-    triples_result,
+    table_triples_result,
 )
+from ner_app_spark.tables.icelite import IceTable
 from ner_app_spark.streaming.sources import add_chunk
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -127,43 +128,6 @@ def test_first_seen_state_ttl_expires_and_readmits(spark, scratch):
     # would have suppressed it
     assert h_rows == [1, 2]
     assert emitted.filter(F.col("text_hash") == "x").count() == 1
-
-
-def test_incremental_triples_resume_processes_only_new_chunks(spark, scratch):
-    """Kill-and-restart: run the incremental KG stream over the first two
-    chunks, then drip two more and restart with the SAME checkpoint. The
-    second run must create sink directories only for the new batches
-    (offsets resumed, nothing reprocessed), and the union must equal the
-    batch answer."""
-    from ner_app_spark.operators.extract import (
-        extract_phrases_and_triples,
-        fused_triples,
-    )
-    from ner_app_spark.sources.pages import synth_pages_df
-
-    pages = synth_pages_df(spark, 40)
-    inp, sink, ckpt = f"{scratch}/in", f"{scratch}/sink", f"{scratch}/ckpt"
-    quarters = [pages.filter(F.crc32(F.col("url")) % 4 == i) for i in range(4)]
-    add_chunk(quarters[0], inp, 0)
-    add_chunk(quarters[1], inp, 1)
-    q = stream_kg_triples(spark, inp, sink, ckpt, schema=pages.schema)
-    q.awaitTermination()
-    first_batches = set(os.listdir(sink))
-    assert len(first_batches) == 2
-
-    add_chunk(quarters[2], inp, 2)
-    add_chunk(quarters[3], inp, 3)
-    q2 = stream_kg_triples(spark, inp, sink, ckpt, schema=pages.schema)
-    q2.awaitTermination()
-    all_batches = set(os.listdir(sink))
-    assert first_batches < all_batches and len(all_batches) == 4
-
-    res = triples_result(spark, sink)
-    expected = fused_triples(
-        extract_phrases_and_triples(synth_pages_df(spark, 40), num_partitions=4)
-    )
-    assert res.exceptAll(expected).count() == 0
-    assert expected.exceptAll(res).count() == 0
 
 
 def test_first_seen_state_survives_restart(spark, scratch):
@@ -495,36 +459,31 @@ def test_continuous_trigger_processes_late_arrivals(spark, scratch):
     from ner_app_spark.sources.pages import synth_pages_df
 
     pages = synth_pages_df(spark, 8)
-    inp, sink, ckpt = f"{scratch}/in", f"{scratch}/sink", f"{scratch}/ckpt"
+    inp, table, ckpt = f"{scratch}/in", f"{scratch}/table", f"{scratch}/ckpt"
     halves = [pages.filter(F.crc32(F.col("url")) % 2 == i) for i in range(2)]
     add_chunk(halves[0], inp, 0)
-    q = stream_kg_triples(
-        spark, inp, sink, ckpt, schema=pages.schema, num_partitions=2,
+
+    def n_batches() -> int:
+        if not IceTable.exists(table):
+            return 0
+        return len(IceTable(table).snapshots())
+
+    q = stream_kg_triples_to_table(
+        spark, inp, table, ckpt, schema=pages.schema, num_partitions=2,
         available_now=False, processing_interval="1 seconds",
     )
     try:
         deadline = _time.time() + 90
-        while _time.time() < deadline and len(
-            [d for d in os.listdir(sink) if d.startswith("batch=")]
-            if os.path.exists(sink) else []
-        ) < 1:
+        while _time.time() < deadline and n_batches() < 1:
             _time.sleep(1)
         add_chunk(halves[1], inp, 1)  # arrives AFTER the query started
-        while _time.time() < deadline:
-            if os.path.exists(sink) and len(
-                [d for d in os.listdir(sink) if d.startswith("batch=")]
-            ) >= 2:
-                break
+        while _time.time() < deadline and n_batches() < 2:
             _time.sleep(1)
     finally:
         q.stop()
         q.awaitTermination()
-    res = triples_result(spark, sink)
-    n_batches = len(
-        [d for d in os.listdir(sink) if d.startswith("batch=")]
-    )
-    assert n_batches >= 2  # the late file was picked up continuously
-    assert res.count() > 0
+    assert n_batches() >= 2  # the late file was picked up continuously
+    assert table_triples_result(spark, table).count() > 0
 
 
 def test_stream_analyzes_extracted_html_like_the_batch_job(spark, scratch):
@@ -553,11 +512,11 @@ def test_stream_analyzes_extracted_html_like_the_batch_job(spark, scratch):
         out.cleanup()
     assert blanked & {t[0] for t in want}  # the raw text would lose these
 
-    inp, sink, ckpt = f"{scratch}/in", f"{scratch}/sink", f"{scratch}/ckpt"
+    inp, table, ckpt = f"{scratch}/in", f"{scratch}/table", f"{scratch}/ckpt"
     add_chunk(pages.filter(F.crc32(F.col("url")) % 2 == 0), inp, 0)
     add_chunk(pages.filter(F.crc32(F.col("url")) % 2 == 1), inp, 1)
-    stream_kg_triples(
-        spark, inp, sink, ckpt, schema=pages.schema, num_partitions=2
+    stream_kg_triples_to_table(
+        spark, inp, table, ckpt, schema=pages.schema, num_partitions=2
     ).awaitTermination()
-    got = sorted(map(tuple, triples_result(spark, sink).collect()))
+    got = sorted(map(tuple, table_triples_result(spark, table).collect()))
     assert got == want
