@@ -42,8 +42,8 @@ def _force(df) -> int:
 
 def kg_job(spark, n_pages: int, n_parts: int) -> dict:
     """The production KG job over ``n_pages`` synthetic pages, without
-    the graph-table writes: run_pipeline -> pipeline_counters -> cleanup.
-    Returns pipeline_counters' counts."""
+    publishing the graph tables (write_outputs): run_pipeline ->
+    pipeline_counters -> cleanup. Returns pipeline_counters' counts."""
     from ner_app_spark.plans.pipeline import pipeline_counters, run_pipeline
     from ner_app_spark.sources.pages import synth_pages_df
 

@@ -131,61 +131,65 @@ def main() -> int:
         min_link_score=args.min_link_score,
         web_aliases=args.web_aliases,
     )
-    counters = pipeline_counters(out)
-    if args.output:
-        write_outputs(out, args.output)
-    n_contexts = None
-    if args.contexts:
-        from ner_app_spark.operators.linking import mention_contexts
-        from ner_app_spark.sources.pages import morphology_df
-
-        # mine the boilerplate-stripped surface the extraction/linking
-        # stages saw (never the raw html), with the SAME dictionary the
-        # linking stage probed (out.aliases — includes --web-aliases)
-        ctx = mention_contexts(
-            out.extracted,
-            out.aliases,
-            morphology_df(spark),
-            lang=args.lang,
-            text_col="extracted",
-        )
+    # the scratch dir holds every staged frame: remove it on failure
+    # too (a failed --output or --publish would otherwise leak it)
+    try:
+        counters = pipeline_counters(out)
         if args.output:
-            ctx.write.mode("overwrite").parquet(f"{args.output}/contexts")
-            ctx = spark.read.parquet(f"{args.output}/contexts")
-        n_contexts = ctx.count()
-    split_counts = None
-    if args.edge_split:
-        from ner_app_spark.operators.sampling import edge_split
+            write_outputs(out, args.output)
+        n_contexts = None
+        if args.contexts:
+            from ner_app_spark.operators.linking import mention_contexts
+            from ner_app_spark.sources.pages import morphology_df
 
-        split = edge_split(out.triples.select("subj", "pred", "obj"))
-        if args.output:
-            split.write.mode("overwrite").parquet(f"{args.output}/edge_split")
-            split = spark.read.parquet(f"{args.output}/edge_split")
-        split_counts = {
-            r["split"]: r["count"]
-            for r in split.groupBy("split").count().collect()
-        }
-    snapshots = None
-    if args.publish:
-        from ner_app_spark.tables.icelite import publish_pipeline_tables
+            # mine the boilerplate-stripped surface the extraction/linking
+            # stages saw (never the raw html), with the SAME dictionary the
+            # linking stage probed (out.aliases — includes --web-aliases)
+            ctx = mention_contexts(
+                out.extracted,
+                out.aliases,
+                morphology_df(spark),
+                lang=args.lang,
+                text_col="extracted",
+            )
+            if args.output:
+                ctx.write.mode("overwrite").parquet(f"{args.output}/contexts")
+                ctx = spark.read.parquet(f"{args.output}/contexts")
+            n_contexts = ctx.count()
+        split_counts = None
+        if args.edge_split:
+            from ner_app_spark.operators.sampling import edge_split
 
-        tables = publish_pipeline_tables(spark, out, args.publish)
-        snapshots = {
-            name: t.current_snapshot_id() for name, t in tables.items()
-        }
-    wall = round(time.monotonic() - t0, 3)
-    print(json.dumps({
-        "wall_sec": wall,
-        **({"snapshots": snapshots} if snapshots else {}),
-        **({"host_gate": host_gate} if host_gate else {}),
-        **({"edge_split": split_counts} if split_counts is not None else {}),
-        **({"contexts": n_contexts} if n_contexts is not None else {}),
-        "docs_per_sec": round(counters["documents"] / wall, 2),
-        "triples_per_sec": round(counters["triples"] / wall, 2),
-        **counters,
-        "stages": [m.__dict__ for m in out.metrics],
-    }))
-    out.cleanup()
+            split = edge_split(out.triples.select("subj", "pred", "obj"))
+            if args.output:
+                split.write.mode("overwrite").parquet(f"{args.output}/edge_split")
+                split = spark.read.parquet(f"{args.output}/edge_split")
+            split_counts = {
+                r["split"]: r["count"]
+                for r in split.groupBy("split").count().collect()
+            }
+        snapshots = None
+        if args.publish:
+            from ner_app_spark.tables.icelite import publish_pipeline_tables
+
+            tables = publish_pipeline_tables(spark, out, args.publish)
+            snapshots = {
+                name: t.current_snapshot_id() for name, t in tables.items()
+            }
+        wall = round(time.monotonic() - t0, 3)
+        print(json.dumps({
+            "wall_sec": wall,
+            **({"snapshots": snapshots} if snapshots else {}),
+            **({"host_gate": host_gate} if host_gate else {}),
+            **({"edge_split": split_counts} if split_counts is not None else {}),
+            **({"contexts": n_contexts} if n_contexts is not None else {}),
+            "docs_per_sec": round(counters["documents"] / wall, 2),
+            "triples_per_sec": round(counters["triples"] / wall, 2),
+            **counters,
+            "stages": [m.__dict__ for m in out.metrics],
+        }))
+    finally:
+        out.cleanup()
     spark.stop()
     return 0
 

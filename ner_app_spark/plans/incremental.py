@@ -33,7 +33,8 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..operators.extract import (
     extract_phrases_and_triples,
@@ -69,7 +70,11 @@ def run_incremental(
 
     The fused extract is the expensive stage; it runs once per DISTINCT
     high-water mark among the output tables (normally once — the marks
-    only diverge if a previous run crashed between its two appends)."""
+    only diverge if a previous run crashed between its two appends).
+
+    No counter re-scans its data: ``pages`` is observed on the fused
+    spill write, and each output table's count is the ``added_records``
+    of the snapshot its append (or create) committed."""
     from ..session import scratch_base
 
     pages_t = IceTable(pages_path)
@@ -105,8 +110,11 @@ def run_incremental(
             inc, _ = pages_t.incremental_scan(
                 spark, from_snapshot=from_sid, to_snapshot=to_sid
             )
+        # a fresh Observation per high-water mark: each is filled by
+        # exactly one write, the fused spill below
+        seen = Observation("incremental.pages")
         fused = extract_phrases_and_triples(
-            extracted_text(inc),
+            extracted_text(inc).observe(seen, F.count(F.lit(1)).alias("pages")),
             lang=lang,
             num_partitions=n_parts,
             text_col="extracted",
@@ -133,21 +141,23 @@ def run_incremental(
                     ),
                 ),
             }
-            n_pages = inc.count()
+            n_pages = seen.get["pages"]
             for name in behind:
                 df = frames[name]
                 path = out_paths[name]
                 if IceTable.exists(path):
-                    IceTable(path).append(
+                    table = IceTable(path)
+                    sid = table.append(
                         spark, df, target_files=target_files,
                         summary_extra={MARKER: to_sid},
                     )
                 else:
-                    IceTable.create(
+                    table = IceTable.create(
                         spark, path, df, target_files=target_files,
                         summary_extra={MARKER: to_sid},
                     )
-                counters[name] += df.count()
+                    sid = table.current_snapshot_id()
+                counters[name] += table.snapshot(sid)["summary"]["added_records"]
                 counters["tables_caught_up"].append(name)
             counters["pages"] += n_pages
         finally:

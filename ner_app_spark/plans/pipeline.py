@@ -4,17 +4,21 @@ lifecycle):
     pages -> extract_text -> phrases (mapInPandas) -> triples
           -> entity links -> canonical ids -> nodes/edges
 
-Every heavy stage optionally checkpoints per-partition (resume with zero
-recomputation of completed parts); counters mirror the reference's stats
-dict (phrase_extractor.py:67-71).
+Every output is computed once: each stage is written once and read
+back, and the counters that mirror the reference's stats dict
+(phrase_extractor.py:67-71) are observed while those writes run. The
+two heavy stages optionally checkpoint per-partition (resume with zero
+recomputation of completed parts).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.components import canonicalize
@@ -45,14 +49,19 @@ class PipelineOutput:
     #: stage probed instead of re-deriving it
     aliases: DataFrame
     metrics: list[StageMetrics] = field(default_factory=list)
-    #: scratch parquet dir backing the heavy stages of a no-workdir run
-    #: (None when checkpointing to a workdir); the frames above read from
-    #: it, so call cleanup() only once you are done with them.
+    #: scratch parquet dir backing the staged frames above (every stage
+    #: without a workdir; links/nodes/edges with one, whose workdir keeps
+    #: only the resumable stages); call cleanup() only once you are done
+    #: with them.
     scratch: str | None = None
+    #: pipeline_counters' values, observed while the stages were written;
+    #: a counter missing here is counted by an action
+    counts: dict = field(default_factory=dict)
+    #: scratch dirs of the frames write_outputs may publish by moving
+    #: (name -> path); a frame not listed is written
+    staged: dict = field(default_factory=dict)
 
     def cleanup(self) -> None:
-        import shutil
-
         if self.scratch:
             shutil.rmtree(self.scratch, ignore_errors=True)
             self.scratch = None
@@ -67,52 +76,84 @@ def run_pipeline(
     min_link_score: float = 0.5,
     web_aliases: bool = False,
 ) -> PipelineOutput:
-    """Run the full pipeline. With ``workdir`` set, the three heavy stages
-    (extracted/phrases/triples) checkpoint per-partition and resume.
+    """Run the full pipeline. Every output frame is written ONCE and
+    read back, so its consumers (canonicalize, the counters, the writes
+    of write_outputs, --contexts/--edge-split/--publish) never re-run
+    its lineage — a lazy frame would re-execute the mapInPandas extract,
+    the linking stage or the nodes/edges shuffles once per consumer.
 
-    Without ``workdir``, each heavy stage is spilled ONCE to a scratch
-    parquet table and read back: the output frames fan out to ~7
-    consumers (links/canon/nodes/edges + the counters), and without a
-    materialization each action would re-execute the whole mapInPandas
-    extract. Parquet, not ``.cache()``, deliberately — the deserialized
-    cache write is DRAM-bandwidth-bound and anti-scales with cores,
-    while the parquet encode is CPU-bound and scales (measured, BENCH.md
-    §5); it is also the north-star shape (stages land in tables). The
+    The extracted and analysis stages land in a scratch parquet table,
+    or with ``workdir`` set checkpoint per-partition and resume; links,
+    nodes and edges always land in scratch. Parquet, not ``.cache()``,
+    deliberately — the deserialized cache write is DRAM-bandwidth-bound
+    and anti-scales with cores, while the parquet encode is CPU-bound
+    and scales (measured, BENCH.md §5); it is also the north-star shape
+    (stages land in tables).
+
+    The counters are observed on those writes (``DataFrame.observe``),
+    except on a checkpointed stage: a resumed run skips completed parts,
+    so its write sees only some rows and one agg over the stage's data
+    counts it instead. Each stage labels its Spark jobs
+    ``pipeline.<stage>`` and appends a StageMetrics (rows, wall). The
     caller owns ``PipelineOutput.cleanup()``."""
-    import shutil
     import tempfile
 
     from ..session import scratch_base
 
     ckpt = CheckpointManager(workdir, n_parts=n_parts) if workdir else None
+    sc = spark.sparkContext
     metrics: list[StageMetrics] = []
-    scratch = (
-        None if ckpt else tempfile.mkdtemp(prefix="ner_kg_", dir=scratch_base())
-    )
+    scratch = tempfile.mkdtemp(prefix="ner_kg_", dir=scratch_base())
 
-    def stage(name: str, df: DataFrame, key: str) -> DataFrame:
-        if ckpt is None:
-            path = f"{scratch}/{name}"
-            df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
-        out, m = ckpt.run_stage(spark, name, df, key)
+    def stage(
+        name: str, df: DataFrame, key: str | None = None, **extra: Column
+    ) -> DataFrame:
+        """``df`` written once and read back. Its StageMetrics counters
+        hold ``rows`` plus the ``extra`` aggregates; a stage with a
+        ``key`` is the resumable one when a workdir is set."""
+        exprs = [F.count(F.lit(1)).alias("rows")]
+        exprs += [e.alias(k) for k, e in extra.items()]
+        caller = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"pipeline.{name}")
+        t0 = time.monotonic()
+        try:
+            if ckpt is not None and key is not None:
+                out, m = ckpt.run_stage(spark, name, df, key)
+                m.counters = out.agg(*exprs).first().asDict()
+            else:
+                path = os.path.join(scratch, name)
+                obs = Observation(f"pipeline.{name}")
+                df.observe(obs, *exprs).write.mode("overwrite").parquet(path)
+                out = spark.read.schema(df.schema).parquet(path)
+                counters = obs.get
+                m = StageMetrics(name, 0, 0, 0, counters["rows"], 0, counters)
+        finally:
+            sc.setJobDescription(caller)
+        m.wall_ms = int((time.monotonic() - t0) * 1000)
         metrics.append(m)
         return out
 
     # mid-run failure must not leak the scratch dir (repeated failed
-    # no-workdir runs would exhaust /dev/shm — round-3 ADVICE #1); the
-    # success path stays caller-owned via PipelineOutput.cleanup()
+    # runs would exhaust /dev/shm — round-3 ADVICE #1); the success path
+    # stays caller-owned via PipelineOutput.cleanup()
     try:
         extracted = stage("extracted", extracted_text(pages), key="url")
         # ONE fused mapInPandas stage emits phrases AND triples (triples
         # are per-doc local, oracle.triples_for_doc) — no shuffle between
-        # them; the kg_triples registry row hash-checks this same path
+        # them; the kg_triples registry row hash-checks this same path.
+        # Observed metrics reject DISTINCT, hence size(collect_set(...))
+        phrase = F.col("kind") == "phrase"
         fused = stage(
             "analysis",
             extract_phrases_and_triples(
                 extracted, lang=lang, num_partitions=n_parts, text_col="extracted"
             ),
             key="url",
+            phrases=F.count_if(phrase),
+            triples=F.count_if(F.col("kind") == "triple"),
+            unique_phrase_types=F.size(
+                F.collect_set(F.when(phrase, F.col("type")))
+            ),
         )
         phrases = fused_phrases(fused)
         triples = fused_triples(fused)
@@ -128,7 +169,9 @@ def run_pipeline(
             from ..operators.webgraph import anchor_alias_dim
 
             aliases = aliases.unionByName(anchor_alias_dim(pages))
-        links = link_mentions(phrases, aliases, min_score=min_link_score)
+        links = stage(
+            "links", link_mentions(phrases, aliases, min_score=min_link_score)
+        )
         # checkpointed runs are reliable END-TO-END: the CC rounds inside
         # canonicalize route through the same manifest-backed checkpoint
         # (subdir keeps cc_round_* manifests apart from stage manifests)
@@ -137,12 +180,22 @@ def run_pipeline(
             workdir=os.path.join(workdir, "cc") if workdir else None,
         )
 
-        nodes = mint_nodes(phrases)
-        edges = mint_edges(triples, nodes)
+        nodes = stage("nodes", mint_nodes(phrases))
+        edges = stage("edges", mint_edges(triples, nodes))
     except BaseException:
-        if scratch:
-            shutil.rmtree(scratch, ignore_errors=True)
+        shutil.rmtree(scratch, ignore_errors=True)
         raise
+    by_stage = {m.stage: m.counters for m in metrics}
+    analysis = by_stage["analysis"]
+    counts = {
+        "documents": by_stage["extracted"]["rows"],
+        "phrases": analysis["phrases"],
+        "unique_phrase_types": analysis["unique_phrase_types"],
+        "triples": analysis["triples"],
+        "links": by_stage["links"]["rows"],
+        "nodes": by_stage["nodes"]["rows"],
+        "edges": by_stage["edges"]["rows"],
+    }
     return PipelineOutput(
         extracted=extracted,
         phrases=phrases,
@@ -154,6 +207,8 @@ def run_pipeline(
         aliases=aliases,
         metrics=metrics,
         scratch=scratch,
+        counts=counts,
+        staged={k: os.path.join(scratch, k) for k in ("nodes", "edges")},
     )
 
 
@@ -241,22 +296,47 @@ def read_analysis(spark: SparkSession, out_dir: str, analysis_id: str) -> dict:
 
 
 def write_outputs(out: PipelineOutput, target_dir: str) -> None:
-    """Materialize graph tables (production: ``writeTo(...).append()`` on
-    an Iceberg catalog; local stand-in: parquet dirs)."""
-    out.nodes.write.mode("overwrite").parquet(f"{target_dir}/nodes")
-    out.edges.write.mode("overwrite").parquet(f"{target_dir}/edges")
+    """Publish the graph tables as parquet dirs under ``target_dir``
+    (production: ``writeTo(...).append()`` on an Iceberg catalog).
+
+    Nothing is recomputed. Nodes and edges that run_pipeline staged are
+    MOVED to ``<target_dir>/nodes|edges`` (a rename on one filesystem, a
+    copy across filesystems), and ``out.nodes``/``out.edges`` are
+    re-pointed at the published dirs so later readers (``--publish``)
+    still work. Triples and links are written from their stage frames;
+    staged links stay in scratch because ``out.canon`` reads them
+    lazily. A frame that was not staged (a hand-built PipelineOutput) is
+    written."""
+    os.makedirs(target_dir, exist_ok=True)
+    for name in ("nodes", "edges"):
+        df = getattr(out, name)
+        dst = os.path.join(target_dir, name)
+        src = out.staged.pop(name, None)
+        if src is None:
+            df.write.mode("overwrite").parquet(dst)
+            continue
+        shutil.rmtree(dst, ignore_errors=True)
+        shutil.move(src, dst)
+        setattr(out, name, df.sparkSession.read.schema(df.schema).parquet(dst))
     out.triples.write.mode("overwrite").parquet(f"{target_dir}/triples")
     out.links.write.mode("overwrite").parquet(f"{target_dir}/links")
 
 
 def pipeline_counters(out: PipelineOutput) -> dict:
-    """Aggregate counters (A4 analog): one action triggers the counts."""
+    """The job counters (A4 analog). A run_pipeline output carries them
+    all, observed while its stages were written, so this launches no
+    Spark job; a counter with no observation (a hand-built
+    PipelineOutput) is counted by an action."""
+    actions = {
+        "documents": out.extracted.count,
+        "phrases": out.phrases.count,
+        "unique_phrase_types": out.phrases.select("type").distinct().count,
+        "triples": out.triples.count,
+        "links": out.links.count,
+        "nodes": out.nodes.count,
+        "edges": out.edges.count,
+    }
     return {
-        "documents": out.extracted.count(),
-        "phrases": out.phrases.count(),
-        "unique_phrase_types": out.phrases.select("type").distinct().count(),
-        "triples": out.triples.count(),
-        "links": out.links.count(),
-        "nodes": out.nodes.count(),
-        "edges": out.edges.count(),
+        k: out.counts[k] if k in out.counts else count()
+        for k, count in actions.items()
     }

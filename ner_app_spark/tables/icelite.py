@@ -66,8 +66,9 @@ manifest-file write per task, which is exactly what Iceberg does.
 
 Reference behavior reproduced: the reference app persists analysis
 results content-addressed and write-once (src/services/text_service.py:
-21-23); snapshots here are content-addressed the same way (snapshot id =
-md5 of the canonical manifest JSON).
+21-23); snapshots here are hashed the same way (snapshot id = md5 of the
+canonical manifest JSON together with the parent id, operation, log
+sequence number and summary, so every commit gets its own id).
 """
 
 from __future__ import annotations
@@ -537,15 +538,28 @@ class IceTable:
         return new_v
 
     def _write_manifest(
-        self, files: list[dict], deletes: list[dict] | None = None
+        self,
+        files: list[dict],
+        deletes: list[dict] | None = None,
+        parent: str | None = None,
+        op: str = "create",
+        seq: int = 0,
+        summary: dict | None = None,
     ) -> str:
-        """Content-addressed manifest: snapshot id = md5 of the canonical
-        file list (same write-once device as the reference's
-        text_service.py:21-23 and plans/artifacts.py)."""
+        """Write one snapshot's manifest; returns the snapshot id, the
+        md5 of the canonical file list together with the parent id, the
+        operation, the snapshot's sequence number in the log and its
+        summary. The manifest alone is not enough: an append that adds
+        no files repeats its parent's file list, and an id equal to its
+        parent's would make the parent chain a loop (the Iceberg spec
+        gives every snapshot a unique id)."""
         body = json.dumps(
             {"files": files, "deletes": deletes or []}, sort_keys=True
         )
-        sid = md5(body.encode()).hexdigest()[:16]
+        ident = json.dumps(
+            [parent, op, seq, summary or {}], sort_keys=True, default=str
+        )
+        sid = md5((ident + body).encode()).hexdigest()[:16]
         p = os.path.join(self._meta_dir, f"snap-{sid}.json")
         if not os.path.exists(p):
             tmp = p + f".tmp-{uuid.uuid4().hex}"
@@ -591,11 +605,13 @@ class IceTable:
         ``deletes``): writes its manifest and appends its log entry;
         ``summary`` merges into the entry's summary and ``schema``, when
         given, replaces the table schema."""
-        sid = self._write_manifest(files, deletes)
-        entry = self._snap_entry(
-            sid, meta["current_snapshot_id"], op, added, files
-        )
+        parent = meta["current_snapshot_id"]
+        entry = self._snap_entry(parent, op, added, files)
         entry["summary"].update(summary or {})
+        sid = entry["id"] = self._write_manifest(
+            files, deletes, parent, op, len(meta["snapshots"]),
+            entry["summary"],
+        )
         new_meta = {
             **meta,
             "current_snapshot_id": sid,
@@ -626,10 +642,12 @@ class IceTable:
         )
         for e in entries:
             e["seq"] = 0
-        sid = t._write_manifest(entries)
-        entry = t._snap_entry(sid, None, "create", entries, entries)
+        entry = t._snap_entry(None, "create", entries, entries)
         if summary_extra:  # watermark stamps ride the ONE commit
             entry["summary"].update(summary_extra)
+        sid = entry["id"] = t._write_manifest(
+            entries, summary=entry["summary"]
+        )
         meta = {
             "format": _FMT,
             "schema_json": json.loads(df.schema.json()),
@@ -642,9 +660,9 @@ class IceTable:
         return t
 
     @staticmethod
-    def _snap_entry(sid, parent, op, added, total) -> dict:
+    def _snap_entry(parent, op, added, total) -> dict:
+        """A log entry without its id, which hashes this summary."""
         return {
-            "id": sid,
             "parent": parent,
             "operation": op,
             "summary": {
@@ -1152,6 +1170,13 @@ class IceTable:
     def snapshots(self) -> list[dict]:
         return self._read_meta()["snapshots"]
 
+    def snapshot(self, snapshot_id: str) -> dict:
+        """The snapshot log entry with id ``snapshot_id``."""
+        for s in self.snapshots():
+            if s["id"] == snapshot_id:
+                return s
+        raise KeyError(f"unknown snapshot {snapshot_id} at {self.path}")
+
     def watermark(self, key: str):
         """The newest value stamped under ``key`` (``summary_extra`` of
         create/append) in snapshot-log order, whether the snapshot's own
@@ -1371,6 +1396,7 @@ class IceTable:
                     f"unknown snapshot {endpoint} at {self.path}"
                 )
         chain: list[dict] = []
+        visited: set[str] = set()
         sid = to_sid
         while sid != from_snapshot:
             if sid is None or sid not in by_id:
@@ -1378,6 +1404,11 @@ class IceTable:
                     f"{from_snapshot} is not an ancestor of {to_sid} "
                     f"at {self.path}"
                 )
+            if sid in visited:
+                raise ValueError(
+                    f"snapshot {sid} is its own ancestor at {self.path}"
+                )
+            visited.add(sid)
             chain.append(by_id[sid])
             sid = by_id[sid]["parent"]
         chain.reverse()  # oldest -> newest

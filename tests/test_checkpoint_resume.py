@@ -121,7 +121,9 @@ def test_pipeline_checkpointed_equals_direct(spark, tmp_path):
     ck = run_pipeline(spark, pages, workdir=str(tmp_path / "wd"), n_parts=4)
     assert _rows(ck.phrases) == _rows(direct.phrases)
     assert _rows(ck.triples) == _rows(direct.triples)
-    assert [m.stage for m in ck.metrics] == ["extracted", "analysis"]
+    assert [m.stage for m in ck.metrics] == [
+        "extracted", "analysis", "links", "nodes", "edges"
+    ]
 
     # resume: nothing recomputed, outputs identical
     ck2 = run_pipeline(spark, pages, workdir=str(tmp_path / "wd"), n_parts=4)
@@ -129,7 +131,8 @@ def test_pipeline_checkpointed_equals_direct(spark, tmp_path):
     assert _rows(ck2.triples) == _rows(direct.triples)
     counters = pipeline_counters(ck2)
     assert counters["documents"] == 30 and counters["triples"] > 0
-    direct.cleanup()
+    for out in (direct, ck, ck2):
+        out.cleanup()
     assert direct.scratch is None
 
 

@@ -1015,6 +1015,45 @@ def test_incremental_scan_validates_endpoints(spark, events, tmp_path):
         t.incremental_scan(spark, from_snapshot=s1, to_snapshot=s0)
 
 
+def test_empty_append_gets_its_own_snapshot(spark, tmp_path):
+    """An append that adds no files repeats its parent's file list; its
+    snapshot id must still be its own, or the parent chain loops and
+    incremental_scan never returns."""
+    t = IceTable.create(spark, str(tmp_path / "t"), _events(spark, n=10))
+    created = t.current_snapshot_id()
+    t.append(spark, _events(spark, n=10))
+    t.append(spark, _events(spark, n=10).limit(0))
+    snaps = t.snapshots()
+    # checked before any chain walk, so a regression fails instead of hanging
+    assert len({s["id"] for s in snaps}) == 3
+    assert all(s["id"] != s["parent"] for s in snaps)
+    df, _ = t.incremental_scan(spark, from_snapshot=created)
+    assert df.count() == 10
+
+
+def test_snapshot_chain_raises_on_a_loop(tmp_path):
+    walks = []
+
+    class Entry(dict):
+        """A log entry whose parent link stops the test once the walk
+        has followed more links than the log has entries."""
+
+        def __getitem__(self, key):
+            if key == "parent":
+                walks.append(self["id"])
+                assert len(walks) <= 3, "the parent walk does not stop"
+            return super().__getitem__(key)
+
+    t = IceTable(str(tmp_path / "t"))
+    meta = {"snapshots": [
+        Entry(id="a", parent=None),
+        Entry(id="b", parent="c"),
+        Entry(id="c", parent="b"),
+    ]}
+    with pytest.raises(ValueError, match="own ancestor"):
+        t._snapshot_chain(meta, "a", "c")
+
+
 def test_incremental_scan_prunes_and_filters(spark, events, tmp_path):
     """Stats pruning and residual filters apply to the incremental file
     set exactly as in scan()."""

@@ -68,6 +68,37 @@ def test_incremental_runs_equal_full_recompute(spark, tmp_path):
         )
 
 
+def test_counters_are_the_committed_increments(spark, tmp_path):
+    """Each table counter is the row count its append committed, equal
+    to an incremental scan of that snapshot; an empty pages append flows
+    through as a zero-row increment that still advances every
+    watermark."""
+    pages_path = str(tmp_path / "pages")
+    out = str(tmp_path / "kg")
+    names = ("phrases", "triples", "links")
+    pages = IceTable.create(
+        spark, pages_path, _batch(spark, 0, 20), target_files=1
+    )
+    c = run_incremental(spark, pages_path, out, n_parts=4)
+    assert c["pages"] == 20
+    for n in names:
+        assert c[n] == IceTable(f"{out}/{n}").scan(spark)[0].count() > 0, n
+
+    for lo, hi in ((20, 32), (32, 32)):
+        pages.append(spark, _batch(spark, lo, hi), target_files=1)
+        before = {n: IceTable(f"{out}/{n}").current_snapshot_id() for n in names}
+        c = run_incremental(spark, pages_path, out, n_parts=4)
+        assert c["pages"] == hi - lo
+        assert sorted(c["tables_caught_up"]) == sorted(names)
+        for n in names:
+            t = IceTable(f"{out}/{n}")
+            assert len({s["id"] for s in t.snapshots()}) == len(t.snapshots())
+            assert last_consumed_snapshot(t) == pages.current_snapshot_id()
+            inc, _ = t.incremental_scan(spark, from_snapshot=before[n])
+            assert c[n] == inc.count(), (n, hi)
+        assert (c["phrases"] > 0) == (hi > lo)
+
+
 def test_noop_when_no_new_pages(spark, tmp_path):
     pages_path = str(tmp_path / "pages")
     out = str(tmp_path / "kg")

@@ -62,3 +62,32 @@ def test_run_stream_removes_synth_landing_dir_when_the_stream_fails(
     assert [
         d for d in os.listdir(scratch) if d.startswith("kg_stream_landing_")
     ] == []
+
+
+def test_run_pipeline_removes_scratch_dir_when_the_output_write_fails(
+    spark, tmp_path, monkeypatch
+):
+    """run_pipeline.py stages every output in a scratch dir; a failing
+    --output write must not leave it behind."""
+    from ner_app_spark.plans import pipeline
+
+    def failing_write(*args, **kwargs):
+        raise RuntimeError("injected write failure")
+
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(session, "get_session", lambda **kw: spark)
+    monkeypatch.setattr(session, "scratch_base", lambda: str(scratch))
+    monkeypatch.setattr(pipeline, "write_outputs", failing_write)
+    monkeypatch.setattr(sys, "argv", [
+        "run_pipeline.py", "--pages", "8", "--parts", "4",
+        "--output", str(tmp_path / "out"),
+    ])
+    spec = importlib.util.spec_from_file_location(
+        "run_pipeline", os.path.join(REPO, "jobs", "run_pipeline.py")
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        job.main()
+    assert [d for d in os.listdir(scratch) if d.startswith("ner_kg_")] == []
