@@ -8,10 +8,12 @@ src/analysis/phrase_extractor.py:45-71), SURVEY.md §3.1:
       -> extracted_text pUDF                        [byte-identical invariant]
       -> filter(lang='ru', text non-empty)          [P6, lang gate]
       -> repartition(xxhash64(url) % N)             [explicit, resume-stable]
+      -> sortWithinPartitions(url)                  [copies of a url adjacent]
       -> mapInPandas(extract_phrases_and_triples)   [F1-F5, A1, A2, A6, O1, §2.28]
 
-There is one analyze stage: phrases and triples come out of the same
-Arrow pass, split afterwards by ``fused_phrases`` / ``fused_triples``.
+There is one analyze stage: phrases, triples and the per-url graph's
+node and edge marks come out of the same Arrow pass, split afterwards by
+``fused_phrases`` / ``fused_triples`` / ``fused_nodes`` / ``fused_edges``.
 
 Scale notes (100 TB):
   * Single-document TF-IDF (A2) is per-doc local math — computing it
@@ -34,12 +36,15 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BooleanType,
     DoubleType,
     IntegerType,
     StringType,
     StructField,
     StructType,
 )
+
+from .graph import node_id
 
 EXTRACTED_SCHEMA = StructType(
     [
@@ -51,6 +56,13 @@ EXTRACTED_SCHEMA = StructType(
 
 #: union row type for the fused analyze pass: kind='phrase' rows carry the
 #: phrase columns (triple columns null), kind='triple' rows the reverse.
+#: ``node`` and ``subj_type``/``obj_type`` mint the url's graph in the same
+#: pass (fused_nodes / fused_edges): ``node`` is true on the one phrase row
+#: per (url, phrase) that mints its node; a triple row carries the type of
+#: the url's phrase node for subj and for obj — NULL where that endpoint is
+#: no phrase of the url (a dangling edge), and both NULL on a repeat of a
+#: (subj, pred, obj) that already minted the url's edge. A triple row with
+#: both types mints an edge.
 FUSED_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -60,9 +72,12 @@ FUSED_SCHEMA = StructType(
         StructField("tfidf", DoubleType(), True),
         StructField("length", IntegerType(), True),
         StructField("head_noun", StringType(), True),
+        StructField("node", BooleanType(), True),
         StructField("subj", StringType(), True),
         StructField("pred", StringType(), True),
         StructField("obj", StringType(), True),
+        StructField("subj_type", StringType(), True),
+        StructField("obj_type", StringType(), True),
     ]
 )
 
@@ -82,8 +97,47 @@ def extracted_text(pages: DataFrame) -> DataFrame:
     return pages.select("url", "html", "lang").mapInPandas(run, schema=EXTRACTED_SCHEMA)
 
 
+def _graph_marks(copies: list) -> tuple[dict, list, list]:
+    """Node and edge marks of ONE url, over the union of its copies
+    ``[(phrases, triples), ...]`` (a url may occur more than once in the
+    input). Returns ``types`` (phrase text -> type; the type is a
+    function of the text, classify_pattern), per copy the phrase rows
+    that mint a node — the max tfidf, first on ties, as mint_nodes'
+    groupBy/max keeps — and per copy the triple rows that mint an edge —
+    the first occurrence of each (subj, pred, obj), as mint_edges'
+    distinct keeps."""
+    if len(copies) == 1:
+        # the common case: analyze emits each phrase once (Counter keys)
+        # and triples_for_doc de-duplicates, so every row mints; the
+        # general path below costs ~4x this per doc
+        phrases, triples = copies[0]
+        types = {p.phrase: p.type for p in phrases}
+        return types, [[True] * len(phrases)], [[True] * len(triples)]
+    best: dict = {}  # phrase -> (tfidf, copy, row)
+    for c, (phrases, _) in enumerate(copies):
+        for r, p in enumerate(phrases):
+            b = best.get(p.phrase)
+            if b is None or p.tfidf > b[0]:
+                best[p.phrase] = (p.tfidf, c, r)
+    types = {p.phrase: p.type for phrases, _ in copies for p in phrases}
+    nodes = [
+        [best[p.phrase][1:] == (c, r) for r, p in enumerate(phrases)]
+        for c, (phrases, _) in enumerate(copies)
+    ]
+    seen: set = set()
+    edges = []
+    for _, triples in copies:
+        first = []
+        for (_u, s, pr, o) in triples:
+            first.append((s, pr, o) not in seen)
+            seen.add((s, pr, o))
+        edges.append(first)
+    return types, nodes, edges
+
+
 def _analyze_fused_batches(batches) -> Iterator:
-    """Arrow-batched analyze emitting BOTH phrases and triples per doc.
+    """Arrow-batched analyze emitting BOTH phrases and triples per doc,
+    and the url's graph marks (FUSED_SCHEMA).
 
     Triple emission is per-document local (both §2.28 rule families group
     within one url — the vendored oracle computes them in plain Python per
@@ -92,28 +146,39 @@ def _analyze_fused_batches(batches) -> Iterator:
     declarative formulation would explode phrases to words and
     re-aggregate through windows keyed on (url, phrase) — a full shuffle
     of ~10x the phrase volume. The kg_triples registry row hash-checks
-    this path against an independent DuckDB replay."""
+    this path against an independent DuckDB replay. Nodes and edges are
+    keyed by url too, so they are marked here from the url's phrases
+    instead of by mint_nodes' and mint_edges' shuffles.
+
+    The input is sorted by url within its partition, so the copies of a
+    url arrive together; the url last seen is carried across Arrow
+    batches until the next url (or the end of the partition) closes it.
+    Phrase and triple rows stay one set per copy."""
     import pandas as pd
 
     from ..oracle import analyze, triples_for_doc
 
-    for pdf in batches:
-        # columnar accumulation (phrase block then triple block, concatenated
-        # per column): pd.DataFrame over a list of row tuples transposes
-        # through a single object ndarray — at ~5x phrase + ~9x triple
-        # amplification per doc that transpose dominated the batch wall
-        p_url: list = []
-        p_phrase: list = []
-        p_type: list = []
-        p_tfidf: list = []
-        p_len: list = []
-        p_head: list = []
-        t_url: list = []
-        t_s: list = []
-        t_p: list = []
-        t_o: list = []
-        for url, text in zip(pdf["url"], pdf["text"]):
-            phrases = analyze(text)
+    # columnar accumulation (phrase block then triple block, concatenated
+    # per column): pd.DataFrame over a list of row tuples transposes
+    # through a single object ndarray — at ~5x phrase + ~9x triple
+    # amplification per doc that transpose dominated the batch wall
+    p_url: list = []
+    p_phrase: list = []
+    p_type: list = []
+    p_tfidf: list = []
+    p_len: list = []
+    p_head: list = []
+    p_node: list = []
+    t_url: list = []
+    t_s: list = []
+    t_p: list = []
+    t_o: list = []
+    t_st: list = []
+    t_ot: list = []
+
+    def close(url, copies) -> None:
+        types, nodes, edges = _graph_marks(copies)
+        for (phrases, triples), node, edge in zip(copies, nodes, edges):
             for p in phrases:
                 p_url.append(url)
                 p_phrase.append(p.phrase)
@@ -121,13 +186,18 @@ def _analyze_fused_batches(batches) -> Iterator:
                 p_tfidf.append(p.tfidf)
                 p_len.append(p.length)
                 p_head.append(p.head_noun)
-            for (_u, s, pr, o) in triples_for_doc(url, phrases):
+            p_node.extend(node)
+            for (_u, s, pr, o), first in zip(triples, edge):
                 t_url.append(url)
                 t_s.append(s)
                 t_p.append(pr)
                 t_o.append(o)
+                t_st.append(types.get(s) if first else None)
+                t_ot.append(types.get(o) if first else None)
+
+    def frame() -> pd.DataFrame:
         n_p, n_t = len(p_url), len(t_url)
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "url": p_url + t_url,
                 "kind": ["phrase"] * n_p + ["triple"] * n_t,
@@ -136,11 +206,33 @@ def _analyze_fused_batches(batches) -> Iterator:
                 "tfidf": p_tfidf + [None] * n_t,
                 "length": p_len + [None] * n_t,
                 "head_noun": p_head + [None] * n_t,
+                "node": p_node + [None] * n_t,
                 "subj": [None] * n_p + t_s,
                 "pred": [None] * n_p + t_p,
                 "obj": [None] * n_p + t_o,
+                "subj_type": [None] * n_p + t_st,
+                "obj_type": [None] * n_p + t_ot,
             }
         )
+        for col in (p_url, p_phrase, p_type, p_tfidf, p_len, p_head, p_node,
+                    t_url, t_s, t_p, t_o, t_st, t_ot):
+            col.clear()
+        return out
+
+    url, copies = None, []
+    for pdf in batches:
+        for u, text in zip(pdf["url"], pdf["text"]):
+            if u != url:
+                if copies:
+                    close(url, copies)
+                url, copies = u, []
+            phrases = analyze(text)
+            copies.append((phrases, triples_for_doc(u, phrases)))
+        if p_url or t_url:
+            yield frame()
+    if copies:
+        close(url, copies)
+        yield frame()
 
 
 def extract_phrases_and_triples(
@@ -149,16 +241,21 @@ def extract_phrases_and_triples(
     num_partitions: int | None = None,
     text_col: str = "text",
 ) -> DataFrame:
-    """pages -> fused (url, kind, phrase..., subj/pred/obj) rows: the
-    map-side-fused flagship stage. Split with fused_phrases/fused_triples.
+    """pages -> fused (url, kind, phrase..., subj/pred/obj, graph marks)
+    rows: the map-side-fused flagship stage. Split with fused_phrases /
+    fused_triples / fused_nodes / fused_edges.
 
     Explicit repartition on xxhash64(url) (north_rule: partitioning
     handled explicitly) gives uniform Arrow batch sizes and stable
-    resume partitions regardless of upstream file layout."""
+    resume partitions regardless of upstream file layout, and puts every
+    copy of a url in one partition, where the graph marks merge them."""
     docs = pages.filter(F.col("lang") == lang).filter(F.length(F.col(text_col)) > 0)
     docs = docs.select("url", F.col(text_col).alias("text"))
     if num_partitions:
         docs = docs.repartition(num_partitions, F.xxhash64("url"))
+    # the copies of a url must be adjacent for its graph marks (the
+    # repartition puts them in one partition); the sort adds no exchange
+    docs = docs.sortWithinPartitions("url")
     return docs.mapInPandas(_analyze_fused_batches, schema=FUSED_SCHEMA)
 
 
@@ -179,3 +276,33 @@ def fused_triples(fused: DataFrame) -> DataFrame:
         "url", "subj", "pred", "obj"
     )
 
+
+def fused_nodes(fused: DataFrame) -> DataFrame:
+    """The per-url phrase nodes of a fused frame, a narrow projection
+    equal to ``graph.mint_nodes(fused_phrases(fused))`` (same columns,
+    same ids) when every copy of a url was in one partition — which the
+    ``num_partitions`` repartition of extract_phrases_and_triples
+    guarantees."""
+    return fused.filter(F.col("node")).select(
+        F.col("url").alias("graph_id"),
+        node_id(F.col("url"), F.col("phrase"), F.col("type")).alias("node_id"),
+        F.col("phrase").alias("text"),
+        "type",
+        F.lit("phrase").alias("phrase_type"),
+        F.col("tfidf").cast("double").alias("tfidf"),
+        F.lit(False).alias("hidden"),
+    )
+
+
+def fused_edges(fused: DataFrame) -> DataFrame:
+    """The per-url edges of a fused frame, a narrow projection equal to
+    ``graph.mint_edges(fused_triples(fused), fused_nodes(fused))`` under
+    the same condition as fused_nodes."""
+    return fused.filter(
+        F.col("subj_type").isNotNull() & F.col("obj_type").isNotNull()
+    ).select(
+        F.col("url").alias("graph_id"),
+        node_id(F.col("url"), F.col("subj"), F.col("subj_type")).alias("src"),
+        node_id(F.col("url"), F.col("obj"), F.col("obj_type")).alias("dst"),
+        "pred",
+    )

@@ -27,7 +27,13 @@ def node_id(graph_col, text_col, type_col):
 
 def mint_nodes(phrases: DataFrame, graph_col: str = "url") -> DataFrame:
     """phrases -> nodes(graph_id, node_id, text, type, phrase_type, tfidf,
-    hidden). One node per (graph, text, type); tfidf = max over duplicates."""
+    hidden). One node per (graph, text, type); tfidf = max over duplicates.
+
+    The general join form, for phrases from any source. run_pipeline does
+    not call it: its phrases are keyed by url, so the analysis pass marks
+    the same nodes per url and extract.fused_nodes projects them. This
+    stays the reference the pipeline tests compare against, and
+    perfbench's traced op calls it."""
     return (
         phrases.groupBy(
             F.col(graph_col).alias("graph_id"),
@@ -50,7 +56,10 @@ def mint_nodes(phrases: DataFrame, graph_col: str = "url") -> DataFrame:
 def mint_edges(triples: DataFrame, nodes: DataFrame, graph_col: str = "url") -> DataFrame:
     """triples(url, subj, pred, obj) -> edges(graph_id, src, dst, pred),
     endpoints resolved against node text within the same graph; dangling
-    endpoints dropped (FK-validated insert)."""
+    endpoints dropped (FK-validated insert).
+
+    The general join form, kept as mint_nodes is: run_pipeline projects
+    the same edges from the analysis pass (extract.fused_edges)."""
     n = nodes.select(
         F.col("graph_id"), F.col("text"), F.col("node_id")
     )

@@ -11,23 +11,40 @@ lineage:
     same part across runs, cluster sizes, and AQE decisions
     (resume-stable, SURVEY.md §7.6c);
   * a manifest parquet records (part_id, row_count, content_hash,
-    wall_ms, status) per completed part — the reference's stats dict
-    (phrase_extractor.py:67-71) elevated to per-partition counters;
+    wall_ms, status, schema_fp) per completed part — the reference's
+    stats dict (phrase_extractor.py:67-71) elevated to per-partition
+    counters;
   * a resumed run anti-joins completed part_ids out of the input and
     recomputes only the rest; data writes use dynamic partition overwrite
     (write-audit-publish: a part is replaced atomically, the manifest row
     is appended only after the data write commits, so a kill between the
-    two re-runs that part idempotently).
+    two re-runs that part idempotently). A part counts as completed only
+    when its manifest row carries the fingerprint of the schema being
+    staged: a part written under another schema would read back with
+    NULLs in the new columns, so it is recomputed.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+_MANIFEST_SCHEMA = (
+    "part_id int, row_count long, content_hash long, wall_ms long, "
+    "status string, schema_fp string"
+)
+
+
+def _schema_fingerprint(schema) -> str:
+    """Column names and types of a stage, hashed: parts written under a
+    different fingerprint are not reused."""
+    return hashlib.md5(schema.simpleString().encode()).hexdigest()
 
 
 @dataclass
@@ -52,16 +69,19 @@ class CheckpointManager:
     def _manifest_dir(self, stage: str) -> str:
         return os.path.join(self.root, stage, "manifest")
 
-    def completed_parts(self, spark: SparkSession, stage: str) -> list[int]:
+    def completed_parts(
+        self, spark: SparkSession, stage: str, schema_fp: str
+    ) -> list[int]:
+        """Parts of ``stage`` committed under the schema ``schema_fp``; a
+        manifest row without a fingerprint (an older manifest) does not
+        count."""
         mdir = self._manifest_dir(stage)
         try:
-            m = spark.read.parquet(mdir)
+            m = spark.read.schema(_MANIFEST_SCHEMA).parquet(mdir)
         except Exception:
             return []
-        return [
-            int(r["part_id"])
-            for r in m.filter(F.col("status") == "ok").select("part_id").distinct().collect()
-        ]
+        done = m.filter((F.col("status") == "ok") & (F.col("schema_fp") == schema_fp))
+        return [int(r["part_id"]) for r in done.select("part_id").distinct().collect()]
 
     def run_stage(
         self,
@@ -76,7 +96,8 @@ class CheckpointManager:
         staged = df.withColumn(
             "part_id", F.pmod(F.xxhash64(F.col(key)), F.lit(self.n_parts))
         )
-        done = set(self.completed_parts(spark, stage))
+        schema_fp = _schema_fingerprint(staged.schema)
+        done = set(self.completed_parts(spark, stage, schema_fp))
         todo_parts = [p for p in range(self.n_parts) if p not in done]
         rows_computed = 0
         if todo_parts:
@@ -117,14 +138,14 @@ class CheckpointManager:
                     int(by_part[p]["content_hash"]) if p in by_part else 0,
                     wall_ms,
                     "ok",
+                    schema_fp,
                 )
                 for p in todo_parts
             ]
             rows_computed = sum(r[1] for r in manifest_rows)
-            spark.createDataFrame(
-                manifest_rows,
-                "part_id int, row_count long, content_hash long, wall_ms long, status string",
-            ).write.mode("append").parquet(self._manifest_dir(stage))
+            spark.createDataFrame(manifest_rows, _MANIFEST_SCHEMA).write.mode(
+                "append"
+            ).parquet(self._manifest_dir(stage))
         out = spark.read.schema(staged.schema).parquet(self._data_dir(stage))
         metrics = StageMetrics(
             stage=stage,

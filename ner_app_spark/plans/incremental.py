@@ -37,6 +37,7 @@ from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import (
+    EXTRACTED_SCHEMA,
     extract_phrases_and_triples,
     extracted_text,
     fused_phrases,
@@ -72,9 +73,10 @@ def run_incremental(
     high-water mark among the output tables (normally once — the marks
     only diverge if a previous run crashed between its two appends).
 
-    No counter re-scans its data: ``pages`` is observed on the fused
-    spill write, and each output table's count is the ``added_records``
-    of the snapshot its append (or create) committed."""
+    No counter re-scans its data: ``pages`` is observed on the spill
+    write of the increment's extracted text, and each output table's
+    count is the ``added_records`` of the snapshot its append (or
+    create) committed."""
     from ..session import scratch_base
 
     pages_t = IceTable(pages_path)
@@ -110,21 +112,29 @@ def run_incremental(
             inc, _ = pages_t.incremental_scan(
                 spark, from_snapshot=from_sid, to_snapshot=to_sid
             )
-        # a fresh Observation per high-water mark: each is filled by
-        # exactly one write, the fused spill below
-        seen = Observation("incremental.pages")
-        fused = extract_phrases_and_triples(
-            extracted_text(inc).observe(seen, F.count(F.lit(1)).alias("pages")),
-            lang=lang,
-            num_partitions=n_parts,
-            text_col="extracted",
-        )
-        # both output appends consume `fused`; spill it once instead of
-        # running the mapInPandas extract twice (plans/pipeline.py shape)
         scratch = tempfile.mkdtemp(prefix="ner_inc_", dir=scratch_base())
         try:
-            fused.write.mode("overwrite").parquet(scratch)
-            fused = spark.read.parquet(scratch)
+            # pages are observed on a write of their own (a fresh
+            # Observation per high-water mark): below the analysis
+            # shuffle, adaptive execution drops the observed subtree
+            # when no page passes the lang filter, and the count is lost
+            seen = Observation("incremental.pages")
+            path = os.path.join(scratch, "extracted")
+            extracted_text(inc).observe(
+                seen, F.count(F.lit(1)).alias("pages")
+            ).write.mode("overwrite").parquet(path)
+            fused = extract_phrases_and_triples(
+                spark.read.schema(EXTRACTED_SCHEMA).parquet(path),
+                lang=lang,
+                num_partitions=n_parts,
+                text_col="extracted",
+            )
+            # both output appends consume `fused`; spill it once instead
+            # of running the mapInPandas extract twice (plans/pipeline.py
+            # shape)
+            path = os.path.join(scratch, "fused")
+            fused.write.mode("overwrite").parquet(path)
+            fused = spark.read.parquet(path)
             phrases = fused_phrases(fused)
             frames = {
                 "phrases": phrases,

@@ -1,14 +1,17 @@
 """The end-to-end KG construction pipeline (SURVEY.md §3.1 Spark
 lifecycle):
 
-    pages -> extract_text -> phrases (mapInPandas) -> triples
-          -> entity links -> canonical ids -> nodes/edges
+    pages -> extract_text -> phrases + triples + nodes/edges (one
+          per-doc mapInPandas pass) -> entity links
+          [-> canonical ids, computed when first read]
 
 Every output is computed once: each stage is written once and read
 back, and the counters that mirror the reference's stats dict
-(phrase_extractor.py:67-71) are observed while those writes run. The
-two heavy stages optionally checkpoint per-partition (resume with zero
-recomputation of completed parts).
+(phrase_extractor.py:67-71) are observed while those writes run. Nodes
+and edges are keyed by their page, so the analysis pass mints them and
+they are narrow projections of its stage: no shuffle, no stage of their
+own. The two heavy stages optionally checkpoint per-partition (resume
+with zero recomputation of completed parts).
 """
 
 from __future__ import annotations
@@ -17,6 +20,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -25,10 +29,11 @@ from ..operators.components import canonicalize
 from ..operators.extract import (
     extract_phrases_and_triples,
     extracted_text,
+    fused_edges,
+    fused_nodes,
     fused_phrases,
     fused_triples,
 )
-from ..operators.graph import mint_edges, mint_nodes
 from ..operators.linking import link_mentions
 from ..sources.pages import alias_dict_df
 from .checkpoint import CheckpointManager, StageMetrics
@@ -40,7 +45,10 @@ class PipelineOutput:
     phrases: DataFrame
     triples: DataFrame
     links: DataFrame
-    canon: DataFrame
+    #: canonical entity ids (operators.components.canonicalize over the
+    #: links), computed on the first read and then reused; given as a
+    #: frame or as a zero-argument function that builds it
+    canon: DataFrame = field(repr=False, compare=False)
     nodes: DataFrame
     edges: DataFrame
     #: the resolved candidate-generation dictionary (curated dim, plus
@@ -50,21 +58,33 @@ class PipelineOutput:
     aliases: DataFrame
     metrics: list[StageMetrics] = field(default_factory=list)
     #: scratch parquet dir backing the staged frames above (every stage
-    #: without a workdir; links/nodes/edges with one, whose workdir keeps
-    #: only the resumable stages); call cleanup() only once you are done
-    #: with them.
+    #: without a workdir; links with one, whose workdir keeps only the
+    #: resumable stages); call cleanup() only once you are done with
+    #: them (canon included).
     scratch: str | None = None
     #: pipeline_counters' values, observed while the stages were written;
     #: a counter missing here is counted by an action
     counts: dict = field(default_factory=dict)
-    #: scratch dirs of the frames write_outputs may publish by moving
-    #: (name -> path); a frame not listed is written
-    staged: dict = field(default_factory=dict)
 
     def cleanup(self) -> None:
         if self.scratch:
             shutil.rmtree(self.scratch, ignore_errors=True)
             self.scratch = None
+
+
+def _read_canon(out: PipelineOutput) -> DataFrame:
+    if not isinstance(out._canon, DataFrame):
+        out._canon = out._canon()
+    return out._canon
+
+
+def _write_canon(out: PipelineOutput, canon) -> None:
+    out._canon = canon
+
+
+# set after @dataclass, which would otherwise take the property for the
+# field's default; the generated __init__ assigns through the setter
+PipelineOutput.canon = property(_read_canon, _write_canon)
 
 
 def run_pipeline(
@@ -76,26 +96,33 @@ def run_pipeline(
     min_link_score: float = 0.5,
     web_aliases: bool = False,
 ) -> PipelineOutput:
-    """Run the full pipeline. Every output frame is written ONCE and
-    read back, so its consumers (canonicalize, the counters, the writes
-    of write_outputs, --contexts/--edge-split/--publish) never re-run
-    its lineage — a lazy frame would re-execute the mapInPandas extract,
-    the linking stage or the nodes/edges shuffles once per consumer.
+    """Run the full pipeline. Every stage is written ONCE and read back,
+    so its consumers (canonicalize, the counters, the writes of
+    write_outputs, --contexts/--edge-split/--publish) never re-run its
+    lineage — a lazy frame would re-execute the mapInPandas extract or
+    the linking stage once per consumer.
 
-    The extracted and analysis stages land in a scratch parquet table,
-    or with ``workdir`` set checkpoint per-partition and resume; links,
-    nodes and edges always land in scratch. Parquet, not ``.cache()``,
+    Three stages: extracted, analysis and links. The extracted and
+    analysis stages land in a scratch parquet table, or with ``workdir``
+    set checkpoint per-partition and resume; links always land in
+    scratch. Nodes and edges are narrow projections of the analysis
+    stage (fused_nodes / fused_edges: the analysis pass marks them per
+    url), equal to mint_nodes / mint_edges over its phrases and triples.
+    ``canon`` is computed on its first read, from the staged links (and
+    with a workdir through its ``cc`` checkpoint dir), so this function
+    launches no connected-components job. Parquet, not ``.cache()``,
     deliberately — the deserialized cache write is DRAM-bandwidth-bound
     and anti-scales with cores, while the parquet encode is CPU-bound
     and scales (measured, BENCH.md §5); it is also the north-star shape
     (stages land in tables).
 
-    The counters are observed on those writes (``DataFrame.observe``),
-    except on a checkpointed stage: a resumed run skips completed parts,
-    so its write sees only some rows and one agg over the stage's data
-    counts it instead. Each stage labels its Spark jobs
-    ``pipeline.<stage>`` and appends a StageMetrics (rows, wall). The
-    caller owns ``PipelineOutput.cleanup()``."""
+    The counters are observed on those writes (``DataFrame.observe``;
+    nodes and edges on the analysis write), except on a checkpointed
+    stage: a resumed run skips completed parts, so its write sees only
+    some rows and one agg over the stage's data counts it instead. Each
+    stage labels its Spark jobs ``pipeline.<stage>`` and appends a
+    StageMetrics (rows, wall). The caller owns
+    ``PipelineOutput.cleanup()``."""
     import tempfile
 
     from ..session import scratch_base
@@ -139,9 +166,10 @@ def run_pipeline(
     try:
         extracted = stage("extracted", extracted_text(pages), key="url")
         # ONE fused mapInPandas stage emits phrases AND triples (triples
-        # are per-doc local, oracle.triples_for_doc) — no shuffle between
-        # them; the kg_triples registry row hash-checks this same path.
-        # Observed metrics reject DISTINCT, hence size(collect_set(...))
+        # are per-doc local, oracle.triples_for_doc) and marks the url's
+        # nodes and edges — no shuffle between them; the kg_triples
+        # registry row hash-checks this same path. Observed metrics
+        # reject DISTINCT, hence size(collect_set(...))
         phrase = F.col("kind") == "phrase"
         fused = stage(
             "analysis",
@@ -153,6 +181,10 @@ def run_pipeline(
             triples=F.count_if(F.col("kind") == "triple"),
             unique_phrase_types=F.size(
                 F.collect_set(F.when(phrase, F.col("type")))
+            ),
+            nodes=F.count_if(F.col("node")),
+            edges=F.count_if(
+                F.col("subj_type").isNotNull() & F.col("obj_type").isNotNull()
             ),
         )
         phrases = fused_phrases(fused)
@@ -172,16 +204,6 @@ def run_pipeline(
         links = stage(
             "links", link_mentions(phrases, aliases, min_score=min_link_score)
         )
-        # checkpointed runs are reliable END-TO-END: the CC rounds inside
-        # canonicalize route through the same manifest-backed checkpoint
-        # (subdir keeps cc_round_* manifests apart from stage manifests)
-        canon = canonicalize(
-            links.select("mention", "entity_id"),
-            workdir=os.path.join(workdir, "cc") if workdir else None,
-        )
-
-        nodes = stage("nodes", mint_nodes(phrases))
-        edges = stage("edges", mint_edges(triples, nodes))
     except BaseException:
         shutil.rmtree(scratch, ignore_errors=True)
         raise
@@ -193,22 +215,28 @@ def run_pipeline(
         "unique_phrase_types": analysis["unique_phrase_types"],
         "triples": analysis["triples"],
         "links": by_stage["links"]["rows"],
-        "nodes": by_stage["nodes"]["rows"],
-        "edges": by_stage["edges"]["rows"],
+        "nodes": analysis["nodes"],
+        "edges": analysis["edges"],
     }
     return PipelineOutput(
         extracted=extracted,
         phrases=phrases,
         triples=triples,
         links=links,
-        canon=canon,
-        nodes=nodes,
-        edges=edges,
+        # checkpointed runs are reliable END-TO-END: the CC rounds inside
+        # canonicalize route through the same manifest-backed checkpoint
+        # (subdir keeps cc_round_* manifests apart from stage manifests)
+        canon=partial(
+            canonicalize,
+            links.select("mention", "entity_id"),
+            workdir=os.path.join(workdir, "cc") if workdir else None,
+        ),
+        nodes=fused_nodes(fused),
+        edges=fused_edges(fused),
         aliases=aliases,
         metrics=metrics,
         scratch=scratch,
         counts=counts,
-        staged={k: os.path.join(scratch, k) for k in ("nodes", "edges")},
     )
 
 
@@ -299,27 +327,24 @@ def write_outputs(out: PipelineOutput, target_dir: str) -> None:
     """Publish the graph tables as parquet dirs under ``target_dir``
     (production: ``writeTo(...).append()`` on an Iceberg catalog).
 
-    Nothing is recomputed. Nodes and edges that run_pipeline staged are
-    MOVED to ``<target_dir>/nodes|edges`` (a rename on one filesystem, a
-    copy across filesystems), and ``out.nodes``/``out.edges`` are
-    re-pointed at the published dirs so later readers (``--publish``)
-    still work. Triples and links are written from their stage frames;
-    staged links stay in scratch because ``out.canon`` reads them
-    lazily. A frame that was not staged (a hand-built PipelineOutput) is
-    written."""
-    os.makedirs(target_dir, exist_ok=True)
-    for name in ("nodes", "edges"):
-        df = getattr(out, name)
-        dst = os.path.join(target_dir, name)
-        src = out.staged.pop(name, None)
-        if src is None:
-            df.write.mode("overwrite").parquet(dst)
-            continue
-        shutil.rmtree(dst, ignore_errors=True)
-        shutil.move(src, dst)
-        setattr(out, name, df.sparkSession.read.schema(df.schema).parquet(dst))
-    out.triples.write.mode("overwrite").parquet(f"{target_dir}/triples")
-    out.links.write.mode("overwrite").parquet(f"{target_dir}/links")
+    The four tables are written from their frames. For a run_pipeline
+    output (one with a scratch dir) nothing is recomputed: nodes and
+    edges are projections of the staged analysis, triples and links
+    read their stages. Its ``out.nodes``/``out.edges`` are then
+    re-pointed at the published dirs, so later readers (``--publish``)
+    scan the written tables instead of projecting the analysis again.
+    Staged links stay in scratch because ``out.canon`` reads them on
+    demand. The frames of a hand-built PipelineOutput are written and
+    left as they are."""
+    for name in ("nodes", "edges", "triples", "links"):
+        getattr(out, name).write.mode("overwrite").parquet(
+            os.path.join(target_dir, name)
+        )
+    if out.scratch:
+        for name in ("nodes", "edges"):
+            df = getattr(out, name)
+            path = os.path.join(target_dir, name)
+            setattr(out, name, df.sparkSession.read.schema(df.schema).parquet(path))
 
 
 def pipeline_counters(out: PipelineOutput) -> dict:

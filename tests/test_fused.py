@@ -27,5 +27,7 @@ def test_fused_kinds_are_disjoint_and_typed(fused):
     for r in rows:
         if r["kind"] == "phrase":
             assert r["phrase"] is not None and r["subj"] is None
+            assert r["node"] is not None and r["subj_type"] is None
         else:
             assert r["subj"] is not None and r["phrase"] is None
+            assert r["node"] is None

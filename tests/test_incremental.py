@@ -70,9 +70,10 @@ def test_incremental_runs_equal_full_recompute(spark, tmp_path):
 
 def test_counters_are_the_committed_increments(spark, tmp_path):
     """Each table counter is the row count its append committed, equal
-    to an incremental scan of that snapshot; an empty pages append flows
-    through as a zero-row increment that still advances every
-    watermark."""
+    to an incremental scan of that snapshot; an empty pages append, and
+    one with no page in the analyzed language, flow through as zero-row
+    increments that still advance every watermark and count their
+    pages."""
     pages_path = str(tmp_path / "pages")
     out = str(tmp_path / "kg")
     names = ("phrases", "triples", "links")
@@ -84,8 +85,12 @@ def test_counters_are_the_committed_increments(spark, tmp_path):
     for n in names:
         assert c[n] == IceTable(f"{out}/{n}").scan(spark)[0].count() > 0, n
 
-    for lo, hi in ((20, 32), (32, 32)):
-        pages.append(spark, _batch(spark, lo, hi), target_files=1)
+    # lang: None keeps the synthetic mix, "en" relabels every page
+    for lo, hi, lang in ((20, 32, None), (32, 32, None), (32, 40, "en")):
+        batch = _batch(spark, lo, hi)
+        if lang:
+            batch = batch.withColumn("lang", F.lit(lang))
+        pages.append(spark, batch, target_files=1)
         before = {n: IceTable(f"{out}/{n}").current_snapshot_id() for n in names}
         c = run_incremental(spark, pages_path, out, n_parts=4)
         assert c["pages"] == hi - lo
@@ -96,7 +101,7 @@ def test_counters_are_the_committed_increments(spark, tmp_path):
             assert last_consumed_snapshot(t) == pages.current_snapshot_id()
             inc, _ = t.incremental_scan(spark, from_snapshot=before[n])
             assert c[n] == inc.count(), (n, hi)
-        assert (c["phrases"] > 0) == (hi > lo)
+        assert (c["phrases"] > 0) == (hi > lo and lang is None)
 
 
 def test_noop_when_no_new_pages(spark, tmp_path):

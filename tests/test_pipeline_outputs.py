@@ -1,14 +1,20 @@
 """run_pipeline computes each output once: its counters are observed
-while the stages are written, and write_outputs publishes the staged
-nodes/edges by moving them instead of recomputing them."""
+while the stages are written, nodes and edges are projections of the
+analysis stage that equal mint_nodes/mint_edges, canonicalization runs
+only when ``canon`` is read, and write_outputs publishes without
+recomputing."""
 
 from __future__ import annotations
 
+import copy
 import os
 from urllib.parse import urlparse
 
 import pytest
 
+from ner_app_spark import oracle
+from ner_app_spark.operators import components
+from ner_app_spark.operators.components import canonicalize
 from ner_app_spark.operators.extract import (
     extract_phrases_and_triples,
     extracted_text,
@@ -25,7 +31,7 @@ from ner_app_spark.plans.pipeline import (
 )
 from ner_app_spark.sources.pages import alias_dict_df, synth_pages_df
 
-STAGES = ["extracted", "analysis", "links", "nodes", "edges"]
+STAGES = ["extracted", "analysis", "links"]
 
 
 @pytest.fixture(scope="module")
@@ -39,6 +45,22 @@ def direct(spark, pages):
     out = run_pipeline(spark, pages, n_parts=4)
     yield out
     out.cleanup()
+
+
+@pytest.fixture(scope="module")
+def modes(spark, pages, direct, tmp_path_factory):
+    """run_pipeline outputs in the three checkpoint modes: no workdir, a
+    fresh workdir, and that workdir fully resumed."""
+    wd = str(tmp_path_factory.mktemp("modes") / "wd")
+    outs = {"direct": direct}
+    try:
+        for mode in ("workdir", "resumed"):
+            outs[mode] = run_pipeline(spark, pages, workdir=wd, n_parts=4)
+        yield outs
+    finally:
+        for mode in ("workdir", "resumed"):
+            if mode in outs:
+                outs[mode].cleanup()
 
 
 @pytest.fixture(scope="module")
@@ -80,6 +102,27 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _dirs(df):
+    return {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}
+
+
+def _assert_minted_graph(spark, out, target):
+    """Published nodes/edges equal mint_nodes/mint_edges over the run's
+    phrases and triples, and so do the analysis stage's counters."""
+    want_nodes = mint_nodes(out.phrases)
+    want = {
+        "nodes": _rows(want_nodes),
+        "edges": _rows(mint_edges(out.triples, want_nodes)),
+    }
+    # copied: write_outputs re-points the frames of the output it writes
+    write_outputs(copy.copy(out), target)
+    analysis = {m.stage: m for m in out.metrics}["analysis"].counters
+    for name in ("nodes", "edges"):
+        got = _rows(spark.read.parquet(os.path.join(target, name)))
+        assert got == want[name], name
+        assert analysis[name] == len(want[name]) == out.counts[name], name
+
+
 def _hand_built(fresh, **kw) -> PipelineOutput:
     return PipelineOutput(
         extracted=fresh["extracted"], phrases=fresh["phrases"],
@@ -91,31 +134,91 @@ def _hand_built(fresh, **kw) -> PipelineOutput:
 
 
 def test_observed_counters_equal_fresh_counts_in_every_mode(
-    spark, pages, direct, fresh_counts, tmp_path
+    modes, fresh_counts
 ):
     assert fresh_counts["documents"] == 30 and fresh_counts["edges"] > 0
-
-    def check(out, mode):
+    for mode, out in modes.items():
         assert pipeline_counters(out) == fresh_counts, mode
         assert [m.stage for m in out.metrics] == STAGES, mode
-        rows = {m.stage: m.counters["rows"] for m in out.metrics}
-        assert rows["extracted"] == fresh_counts["documents"], mode
-        assert rows["analysis"] == (
+        counters = {m.stage: m.counters for m in out.metrics}
+        assert counters["extracted"]["rows"] == fresh_counts["documents"], mode
+        assert counters["analysis"]["rows"] == (
             fresh_counts["phrases"] + fresh_counts["triples"]
         ), mode
-        for name in ("links", "nodes", "edges"):
-            assert rows[name] == fresh_counts[name], (mode, name)
+        assert counters["links"]["rows"] == fresh_counts["links"], mode
+        for name in ("nodes", "edges"):
+            assert counters["analysis"][name] == fresh_counts[name], (mode, name)
+        if mode != "direct":
+            resumed = out.metrics[1].parts_computed == 0
+            assert resumed == (mode == "resumed")
 
-    check(direct, "direct")
+
+def test_nodes_and_edges_are_the_minted_graph_in_every_mode(
+    spark, modes, tmp_path
+):
+    """Nodes and edges are projections of the analysis stage (no stage
+    of their own) and publish exactly mint_nodes/mint_edges."""
+    for mode, out in modes.items():
+        analysis = _dirs(out.phrases)
+        for name in ("nodes", "edges"):
+            assert _dirs(getattr(out, name)) == analysis, (mode, name)
+        _assert_minted_graph(spark, out, str(tmp_path / mode))
+
+
+def test_duplicate_urls_merge_into_one_graph_per_url(spark, pages, tmp_path):
+    """A url that occurs twice (an exact copy, or two different bodies)
+    gets mint_nodes' one node per (url, text, type) with the max tfidf
+    and mint_edges' distinct edges over the union of its copies, while
+    its phrase and triple rows stay one set per copy."""
+    rows = [r.asDict() for r in pages.collect()]
+    ru = [r for r in rows if r["lang"] == "ru" and r["text"]]
+    corpus = rows + [dict(ru[0]), {**ru[1], "url": ru[2]["url"]}]
+    out = run_pipeline(
+        spark, spark.createDataFrame(corpus, pages.schema), n_parts=4
+    )
+    try:
+        want_phrases, want_triples = [], []
+        for r in corpus:
+            if r["lang"] != "ru" or not r["text"]:
+                continue
+            ph = oracle.analyze(r["text"])
+            want_phrases += [
+                (r["url"], p.phrase, p.type, p.tfidf, p.length, p.head_noun)
+                for p in ph
+            ]
+            want_triples += oracle.triples_for_doc(r["url"], ph)
+        assert _rows(out.phrases) == sorted(want_phrases)
+        assert _rows(out.triples) == sorted(want_triples)
+        _assert_minted_graph(spark, out, str(tmp_path / "kg"))
+    finally:
+        out.cleanup()
+
+
+def test_canon_is_computed_on_first_read(spark, pages, monkeypatch, tmp_path):
+    calls = []
+    cc = components.connected_components
+
+    def counting(*args, **kwargs):
+        calls.append(kwargs.get("workdir"))
+        return cc(*args, **kwargs)
+
+    monkeypatch.setattr(components, "connected_components", counting)
     wd = str(tmp_path / "wd")
-    for mode in ("workdir", "resumed"):
-        out = run_pipeline(spark, pages, workdir=wd, n_parts=4)
-        try:
-            check(out, mode)
-            analysis = out.metrics[1]
-            assert (analysis.parts_computed == 0) == (mode == "resumed")
-        finally:
-            out.cleanup()
+    out = run_pipeline(spark, pages, workdir=wd, n_parts=4)
+    try:
+        assert calls == []
+        canon = out.canon
+        assert out.canon is canon
+        assert calls == [os.path.join(wd, "cc")]
+        want = canonicalize(out.links.select("mention", "entity_id"))
+        assert _rows(canon) == _rows(want) and _rows(want)
+    finally:
+        out.cleanup()
+    df = want.limit(1)
+    assert PipelineOutput(
+        extracted=df, phrases=df, triples=df, links=df, canon=df,
+        nodes=df, edges=df, aliases=df,
+    ).canon is df
 
 
 def test_pipeline_counters_launches_no_spark_job(spark, direct):
@@ -145,7 +248,7 @@ def test_output_frames_read_their_staged_tables(direct):
         assert "parquet" in plan.lower(), name
 
 
-def test_write_outputs_moves_staged_nodes_and_edges(
+def test_write_outputs_writes_and_repoints_nodes_and_edges(
     spark, pages, fresh, tmp_path
 ):
     target = str(tmp_path / "kg")
@@ -156,8 +259,7 @@ def test_write_outputs_moves_staged_nodes_and_edges(
             got = spark.read.parquet(os.path.join(target, name))
             assert _rows(got) == _rows(fresh[name]), name
         for name in ("nodes", "edges"):
-            # moved, not copied, and the output frame reads the published dir
-            assert not os.path.exists(os.path.join(out.scratch, name))
+            # the output frame now reads the published dir
             files = getattr(out, name).inputFiles()
             assert files and all(
                 os.path.dirname(urlparse(f).path) == os.path.join(target, name)
