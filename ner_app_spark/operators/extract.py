@@ -106,13 +106,6 @@ def _graph_marks(copies: list) -> tuple[dict, list, list]:
     groupBy/max keeps — and per copy the triple rows that mint an edge —
     the first occurrence of each (subj, pred, obj), as mint_edges'
     distinct keeps."""
-    if len(copies) == 1:
-        # the common case: analyze emits each phrase once (Counter keys)
-        # and triples_for_doc de-duplicates, so every row mints; the
-        # general path below costs ~4x this per doc
-        phrases, triples = copies[0]
-        types = {p.phrase: p.type for p in phrases}
-        return types, [[True] * len(phrases)], [[True] * len(triples)]
     best: dict = {}  # phrase -> (tfidf, copy, row)
     for c, (phrases, _) in enumerate(copies):
         for r, p in enumerate(phrases):

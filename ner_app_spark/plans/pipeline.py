@@ -328,23 +328,20 @@ def write_outputs(out: PipelineOutput, target_dir: str) -> None:
     (production: ``writeTo(...).append()`` on an Iceberg catalog).
 
     The four tables are written from their frames. For a run_pipeline
-    output (one with a scratch dir) nothing is recomputed: nodes and
-    edges are projections of the staged analysis, triples and links
-    read their stages. Its ``out.nodes``/``out.edges`` are then
-    re-pointed at the published dirs, so later readers (``--publish``)
-    scan the written tables instead of projecting the analysis again.
-    Staged links stay in scratch because ``out.canon`` reads them on
-    demand. The frames of a hand-built PipelineOutput are written and
-    left as they are."""
+    output nothing is recomputed: nodes and edges are projections of
+    the staged analysis, triples and links read their stages. Then
+    ``out.nodes``/``out.edges`` are re-pointed at the published dirs,
+    so later readers (``--publish``) scan the written tables instead of
+    recomputing them. Staged links stay in scratch because
+    ``out.canon`` reads them on demand."""
     for name in ("nodes", "edges", "triples", "links"):
         getattr(out, name).write.mode("overwrite").parquet(
             os.path.join(target_dir, name)
         )
-    if out.scratch:
-        for name in ("nodes", "edges"):
-            df = getattr(out, name)
-            path = os.path.join(target_dir, name)
-            setattr(out, name, df.sparkSession.read.schema(df.schema).parquet(path))
+    for name in ("nodes", "edges"):
+        df = getattr(out, name)
+        path = os.path.join(target_dir, name)
+        setattr(out, name, df.sparkSession.read.schema(df.schema).parquet(path))
 
 
 def pipeline_counters(out: PipelineOutput) -> dict:

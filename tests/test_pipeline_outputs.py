@@ -280,12 +280,18 @@ def test_hand_built_output_counts_and_writes(
     partial = _hand_built(fresh, counts={"documents": 123})
     assert pipeline_counters(partial) == {**fresh_counts, "documents": 123}
 
-    # frames of a hand-built output were not staged: they are written
+    # frames of a hand-built output were not staged: they are written,
+    # and nodes/edges are re-pointed at the published dirs as for a run
     out = _hand_built(fresh)
-    nodes = out.nodes
     target = str(tmp_path / "kg")
     write_outputs(out, target)
-    assert out.nodes is nodes
+    for name in ("nodes", "edges"):
+        files = getattr(out, name).inputFiles()
+        assert files and all(
+            os.path.dirname(urlparse(f).path) == os.path.join(target, name)
+            for f in files
+        ), files
+        assert _rows(getattr(out, name)) == _rows(fresh[name]), name
     for name in ("nodes", "edges", "links", "triples"):
         got = spark.read.parquet(os.path.join(target, name))
         assert got.count() == fresh_counts[name], name
