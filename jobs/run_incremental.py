@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Incremental ingestion entrypoint: consume pages appended to a growing
-snapshot table since the last run, append phrases/triples increments.
+snapshot table since the last run, append phrases/triples/links
+increments.
 
     cd /root/repo && zip -qr /tmp/ner_app_spark.zip ner_app_spark
     spark-submit --master local[32] --py-files /tmp/ner_app_spark.zip \
@@ -9,9 +10,12 @@ snapshot table since the last run, append phrases/triples increments.
 
 Idempotent under crash/re-run: each output table records the pages
 snapshot it has consumed in its own atomic commit (plans/incremental.py);
-re-invocation processes only what is missing, per table. Run the global
-consolidation (linking/canonicalization/nodes/edges) separately via
-jobs/run_pipeline.py --publish at a lower cadence.
+re-invocation processes only what is missing, per table. Entity
+linking is per mention occurrence, so it runs incrementally too; the
+global stages (canonicalization, nodes/edges) come from
+jobs/run_pipeline.py --publish, which re-extracts from the pages. The
+JSON output lists the staged ``stages`` of every increment, in the shape
+jobs/run_pipeline.py prints them.
 """
 
 from __future__ import annotations
@@ -26,7 +30,8 @@ def main() -> int:
     ap.add_argument("--pages-table", required=True,
                     help="icelite snapshot table of pages")
     ap.add_argument("--output", required=True,
-                    help="root for the phrases/ and triples/ output tables")
+                    help="root for the phrases/, triples/ and links/ output "
+                    "tables")
     ap.add_argument("--parts", type=int, default=32)
     ap.add_argument("--lang", default="ru")
     ap.add_argument("--target-files", type=int, default=None)

@@ -110,13 +110,14 @@ def main() -> int:
         from ner_app_spark.operators import webgraph
 
         hq = webgraph.host_quality(pages)
-        allowed = hq.filter(
-            F.col("mean_quality_micros") >= args.min_host_quality
-        ).select("host")
-        host_gate = {
-            "hosts_total": hq.count(),
-            "hosts_allowed": allowed.count(),
-        }
+        keep = F.col("mean_quality_micros") >= args.min_host_quality
+        # one action for both counts: each action re-runs host_quality
+        # over the whole pages scan
+        host_gate = hq.agg(
+            F.count(F.lit(1)).alias("hosts_total"),
+            F.count_if(keep).alias("hosts_allowed"),
+        ).first().asDict()
+        allowed = hq.filter(keep).select("host")
         pages = pages.join(
             F.broadcast(allowed),
             F.regexp_extract("url", webgraph.HOST_RE, 1) == F.col("host"),

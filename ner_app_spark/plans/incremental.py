@@ -5,47 +5,42 @@ Re-running the full pipeline per dump rescans 10^12 rows to process the
 newest 10^9 — this plan instead consumes ONLY the pages appended since
 the last run, using ``IceTable.incremental_scan``:
 
-    pages table (icelite) --incremental_scan--> extract (mapInPandas)
+    pages table (icelite) --incremental_scan--> run_pipeline
         --> append to `phrases` table   [watermark: consumed pages snapshot]
         --> append to `triples` table   [watermark: consumed pages snapshot]
+        --> append to `links` table     [watermark: consumed pages snapshot]
 
 Exactly-once, the same device as the streaming sink (streaming/icesink.py):
 each output append stamps the consumed pages-table snapshot id as an
 icelite watermark (``summary_extra``) into its OWN atomic snapshot
-commit. A crash anywhere — before either append, between the two
-appends — leaves each output table with a truthful high-water mark; the
-next run reads each table's watermark and catches it up independently.
-No offsets live outside the tables.
+commit. A crash anywhere — before any append, between two appends —
+leaves each output table with a truthful high-water mark; the next run
+reads each table's watermark and catches it up independently. No
+offsets live outside the tables.
 
-Only the DOC-LOCAL stages are incremental: extract → phrases → triples
-(each page's rows depend on that page alone) and per-occurrence entity
-linking (a mention's link is a deterministic function of the mention and
-the static broadcast alias dim, so per-doc occurrence rows compose over
-appends too). The genuinely global stages (connected-components
-canonicalization, nodes/edges) read the WHOLE accumulated tables — that
-is the periodic publish job (jobs/run_pipeline.py --publish), which at
-scale runs at a lower cadence than ingestion.
+The increment runs through run_pipeline itself — the same staged
+extracted → analysis → links sequence, observed counters and
+``pipeline.<stage>`` job labels as the batch job — and only its
+DOC-LOCAL outputs are appended: each page's phrases and triples depend
+on that page alone, and a mention's link is a deterministic function of
+the mention and the static broadcast alias dim, so per-doc occurrence
+rows compose over appends too. The global outputs (connected-components
+canonicalization, nodes/edges) are left unread, and no job reads the
+accumulated tables: jobs/run_pipeline.py --publish re-extracts from the
+pages. The streaming sink (streaming/icesink.py) lands triples only and
+keeps its own extract stage: run_pipeline would add linking and two
+staged writes to every micro-batch.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
-from pyspark.sql import Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-from ..operators.extract import (
-    EXTRACTED_SCHEMA,
-    extract_phrases_and_triples,
-    extracted_text,
-    fused_phrases,
-    fused_triples,
-)
-from ..operators.linking import link_mentions, link_occurrences
-from ..sources.pages import alias_dict_df
+from ..operators.linking import link_occurrences
 from ..tables.icelite import IceTable
+from .pipeline import run_pipeline
 
 #: watermark key stamped on every incremental append: the pages snapshot
 #: id whose data is fully contained in this output snapshot
@@ -67,18 +62,18 @@ def run_incremental(
     min_link_score: float = 0.5,
 ) -> dict:
     """One incremental ingestion run. Returns a counters dict; a no-op
-    run (no new pages for any output table) reports ``pages: 0``.
+    run (no new pages for any output table) reports ``pages: 0`` and
+    ``stages: []``.
 
-    The fused extract is the expensive stage; it runs once per DISTINCT
+    ``run_pipeline`` runs over the increment once per DISTINCT
     high-water mark among the output tables (normally once — the marks
-    only diverge if a previous run crashed between its two appends).
+    only diverge if a previous run crashed between two appends).
 
-    No counter re-scans its data: ``pages`` is observed on the spill
-    write of the increment's extracted text, and each output table's
-    count is the ``added_records`` of the snapshot its append (or
-    create) committed."""
-    from ..session import scratch_base
-
+    No counter re-scans its data: ``pages`` is run_pipeline's
+    ``documents``, observed while its extracted stage was written, and
+    each output table's count is the ``added_records`` of the snapshot
+    its append (or create) committed. ``stages`` lists the StageMetrics
+    of every run_pipeline call, as jobs/run_pipeline.py prints them."""
     pages_t = IceTable(pages_path)
     to_sid = pages_t.current_snapshot_id()
     out_paths = {
@@ -96,6 +91,7 @@ def run_incremental(
         "triples": 0,
         "links": 0,
         "tables_caught_up": [],
+        "stages": [],
     }
     for from_sid in sorted(
         {f for f in froms.values() if f != to_sid}, key=str
@@ -112,46 +108,16 @@ def run_incremental(
             inc, _ = pages_t.incremental_scan(
                 spark, from_snapshot=from_sid, to_snapshot=to_sid
             )
-        scratch = tempfile.mkdtemp(prefix="ner_inc_", dir=scratch_base())
+        out = run_pipeline(
+            spark, inc, n_parts=n_parts, lang=lang,
+            min_link_score=min_link_score,
+        )
         try:
-            # pages are observed on a write of their own (a fresh
-            # Observation per high-water mark): below the analysis
-            # shuffle, adaptive execution drops the observed subtree
-            # when no page passes the lang filter, and the count is lost
-            seen = Observation("incremental.pages")
-            path = os.path.join(scratch, "extracted")
-            extracted_text(inc).observe(
-                seen, F.count(F.lit(1)).alias("pages")
-            ).write.mode("overwrite").parquet(path)
-            fused = extract_phrases_and_triples(
-                spark.read.schema(EXTRACTED_SCHEMA).parquet(path),
-                lang=lang,
-                num_partitions=n_parts,
-                text_col="extracted",
-            )
-            # both output appends consume `fused`; spill it once instead
-            # of running the mapInPandas extract twice (plans/pipeline.py
-            # shape)
-            path = os.path.join(scratch, "fused")
-            fused.write.mode("overwrite").parquet(path)
-            fused = spark.read.parquet(path)
-            phrases = fused_phrases(fused)
             frames = {
-                "phrases": phrases,
-                "triples": fused_triples(fused),
-                # per-doc occurrences compose over appends: the per-
-                # mention link is deterministic against the static
-                # broadcast alias dim, and scoring runs over only the
-                # increment's DISTINCT mentions
-                "links": link_occurrences(
-                    phrases,
-                    link_mentions(
-                        phrases, alias_dict_df(spark),
-                        min_score=min_link_score,
-                    ),
-                ),
+                "phrases": out.phrases,
+                "triples": out.triples,
+                "links": link_occurrences(out.phrases, out.links),
             }
-            n_pages = seen.get["pages"]
             for name in behind:
                 df = frames[name]
                 path = out_paths[name]
@@ -169,7 +135,8 @@ def run_incremental(
                     sid = table.current_snapshot_id()
                 counters[name] += table.snapshot(sid)["summary"]["added_records"]
                 counters["tables_caught_up"].append(name)
-            counters["pages"] += n_pages
+            counters["pages"] += out.counts["documents"]
+            counters["stages"] += [m.__dict__ for m in out.metrics]
         finally:
-            shutil.rmtree(scratch, ignore_errors=True)
+            out.cleanup()
     return counters

@@ -4,9 +4,12 @@ phrases/triples increments exactly once."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from ner_app_spark import session
 from ner_app_spark.operators.extract import (
     extract_phrases_and_triples,
     extracted_text,
@@ -84,6 +87,9 @@ def test_counters_are_the_committed_increments(spark, tmp_path):
     assert c["pages"] == 20
     for n in names:
         assert c[n] == IceTable(f"{out}/{n}").scan(spark)[0].count() > 0, n
+    assert [m["stage"] for m in c["stages"]] == [
+        "extracted", "analysis", "links"
+    ]
 
     # lang: None keeps the synthetic mix, "en" relabels every page
     for lo, hi, lang in ((20, 32, None), (32, 32, None), (32, 40, "en")):
@@ -94,6 +100,12 @@ def test_counters_are_the_committed_increments(spark, tmp_path):
         before = {n: IceTable(f"{out}/{n}").current_snapshot_id() for n in names}
         c = run_incremental(spark, pages_path, out, n_parts=4)
         assert c["pages"] == hi - lo
+        assert [m["stage"] for m in c["stages"]] == [
+            "extracted", "analysis", "links"
+        ]
+        assert sum(
+            m["rows_computed"] for m in c["stages"] if m["stage"] == "extracted"
+        ) == c["pages"]
         assert sorted(c["tables_caught_up"]) == sorted(names)
         for n in names:
             t = IceTable(f"{out}/{n}")
@@ -115,6 +127,7 @@ def test_noop_when_no_new_pages(spark, tmp_path):
     }
     c = run_incremental(spark, pages_path, out, n_parts=4)
     assert c["pages"] == 0 and c["tables_caught_up"] == []
+    assert c["stages"] == []
     # no-op run commits nothing
     for n in ("phrases", "triples", "links"):
         assert len(IceTable(f"{out}/{n}").snapshots()) == snaps_before[n]
@@ -140,10 +153,16 @@ def test_crash_between_appends_catches_up_per_table(
             raise RuntimeError("injected crash before the triples append")
         return real_append(self, *a, **kw)
 
+    # run_pipeline's scratch dir is the caller's to remove: a crashed
+    # append must not leave it behind
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(session, "scratch_base", lambda: str(scratch))
     monkeypatch.setattr(IceTable, "append", crashing_append)
     with pytest.raises(RuntimeError, match="injected crash"):
         run_incremental(spark, pages_path, out, n_parts=4)
     monkeypatch.undo()
+    assert [d for d in os.listdir(scratch) if d.startswith("ner_kg_")] == []
 
     # phrases advanced, triples/links did not
     marks = {
@@ -153,7 +172,10 @@ def test_crash_between_appends_catches_up_per_table(
     assert marks["phrases"] != marks["triples"]
     assert marks["triples"] == marks["links"]
 
+    monkeypatch.setattr(session, "scratch_base", lambda: str(scratch))
     c = run_incremental(spark, pages_path, out, n_parts=4)
+    monkeypatch.undo()
+    assert [d for d in os.listdir(scratch) if d.startswith("ner_kg_")] == []
     # phrases already done; the lagging tables catch up, no duplicates
     assert sorted(c["tables_caught_up"]) == ["links", "triples"]
     for kind in ("phrases", "triples", "links"):
