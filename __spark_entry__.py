@@ -44,7 +44,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB SQL for ALL 90 queries() entries — including the kg_* SQL
+    """DuckDB SQL for ALL 85 queries() entries — including the kg_* SQL
     replays of the analyze/linking/canonicalization/extract paths, the
     three Structured Streaming rows (micro-batch-order-independent by
     construction, so a batch SQL oracle is exact), the graph-analytics

@@ -117,35 +117,6 @@ def minhash_lsh_candidates(
     )
 
 
-def jaccard_pairs(docs: DataFrame, n_shingle: int = 2, min_jaccard: float = 0.05) -> DataFrame:
-    """(doc_a, doc_b, jaccard): true n-gram Jaccard over DISTINCT shingles,
-    computed only for pairs sharing >= 1 shingle (inverted-index join,
-    never an all-pairs cross)."""
-    sh = explode_shingles(docs, n_shingle).distinct()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        sh.alias("x")
-        .join(sh.alias("y"), "sh")
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .groupBy(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "nb"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
 def near_dup_verified(
     docs: DataFrame, n_shingle: int = 2, min_jaccard: float = 0.3
 ) -> DataFrame:

@@ -2136,44 +2136,6 @@ items AS (
 SELECT p.o_custkey AS custkey, n_orders, COALESCE(n_items, 0) AS n_items
 FROM per_cust p LEFT JOIN items USING (o_custkey)
 """,
-    "pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-       COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-""",
-    "shipping_priority": """
-SELECT l_orderkey AS orderkey,
-       CAST(CAST(o_orderdate AS DATE) AS VARCHAR) AS orderdate,
-       o_orderpriority AS orderpriority,
-       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1995-03-15'
-  AND l_shipdate > TIMESTAMP '1995-03-15'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, orderkey ASC
-LIMIT 10
-""",
-    "local_supplier_volume": """
-SELECT n_name AS nation,
-       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1994-01-01'
-  AND o_orderdate < TIMESTAMP '1995-01-01'
-GROUP BY n_name
-""",
     "sort_limit3": """
 SELECT event_id, event_type FROM events
 ORDER BY ts ASC, event_id ASC LIMIT 3
@@ -2227,23 +2189,6 @@ SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig
 WHERE a.doc_id < b.doc_id
 """,
-    "jaccard_pairs": f"""
-WITH {_BIGRAM_CTE},
-sh AS (SELECT DISTINCT doc_id, unnest(shingles) AS sh FROM sh_list),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i_cnt
-  FROM sh x JOIN sh y ON x.sh = y.sh
-  WHERE x.doc_id < y.doc_id
-  GROUP BY x.doc_id, y.doc_id)
-SELECT doc_a, doc_b, jaccard FROM (
-  SELECT doc_a, doc_b,
-         ROUND(i_cnt / (sa.n_sh + sb.n_sh - i_cnt), 6) AS jaccard
-  FROM inter
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b) t
-WHERE jaccard >= 0.05
-""",
     "entity_doc_freq": f"""
 SELECT token AS entity, COUNT(DISTINCT doc_id) AS n_docs
 FROM ({_TOK_CTE}) toks GROUP BY token
@@ -2281,7 +2226,6 @@ SELECT graph_id, m.node_id, text, type, tfidf, hidden,
 FROM merged m LEFT JOIN deg ON m.node_id = deg.node_id
 """,
     "near_dup_verified": _NEAR_DUP_SQL,
-    "simhash": simhash_sql("documents"),
     "simhash_near_dup": f"""
 WITH fp AS ({simhash_sql("documents")}),
 banded AS (

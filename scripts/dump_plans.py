@@ -13,9 +13,8 @@ SF = "/root/testdata/sf0.001"
 NOTES = {
     "filter_project": "Predicate + projection reach the parquet scan.",
     "join_natural_key": "Dimension join planned as BroadcastHashJoin.",
-    "pricing_summary": "Map-side partial aggregation before the exchange.",
     "kg_phrases": "One explicit xxhash64(url) Exchange; Arrow MapInPandas.",
-    "kg_triples": "Broadcast morphology attach; windows on (url, ...).",
+    "kg_triples": "Fused per-doc MapInPandas behind one explicit xxhash64(url) Exchange.",
     "similar_docs_topk": "Query side broadcasts; token equi-join cosine.",
     "topk_per_group": "WindowGroupLimit rank-limit pushdown.",
     "entity_doc_freq": "Two-phase salted distinct aggregation over hot keys.",

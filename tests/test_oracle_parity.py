@@ -19,8 +19,8 @@ ORACLES = oracle_sql_map()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_PARITY_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
+    "nation", "customer", "part", "orders", "lineitem", "events",
+    "documents", "embeddings",
 ]
 
 
@@ -232,3 +232,25 @@ def test_every_query_has_an_oracle():
         f"queries without oracle: {sorted(set(QUERIES) - set(ORACLES))}; "
         f"oracles without query: {sorted(set(ORACLES) - set(QUERIES))}"
     )
+
+
+def test_driver_window_is_pinned():
+    """The parity driver evaluates the FIRST 50 registry entries, in dict
+    order: deleting, inserting or reordering a row anywhere before
+    position 51 changes which rows it checks."""
+    assert list(QUERIES)[:50] == [
+        "tf_counts", "tfidf_single_doc", "doc_freq_idf", "topk_terms",
+        "doc_stats", "ner_entities", "date_format_tz", "number_clamp",
+        "filter_project", "join_natural_key", "join_remap", "semi_anti_fk",
+        "edge_diff", "union_dedup", "summary_counts", "dup_clusters",
+        "hash_split", "kmeans_clusters", "sort_limit3", "term_sort",
+        "dict_sort", "topk_per_group", "similar_docs_topk",
+        "sentence_search", "highlight_terms", "undirected_dedup", "brat_bio",
+        "subtoken_align", "dedup_exact", "minhash_lsh_pairs",
+        "decontaminate", "checkpoint_resume", "entity_doc_freq",
+        "near_dup_verified", "graph_merge", "pii_scan", "simhash_near_dup",
+        "ann_cosine_topk", "embedding_near_dup", "lsh_bucket_topk",
+        "ivf_topk", "lang_id", "quality_score", "fingerprint",
+        "kg_extracted_text", "kg_phrases", "kg_triples", "kg_links",
+        "kg_canonical", "multimodal_features",
+    ]

@@ -69,8 +69,8 @@ def test_linking_is_single_arrow_stage(spark):
     assert "Window" not in plan
 
 
-def test_pricing_summary_has_partial_aggregation(spark):
-    plan = _physical(QUERIES["pricing_summary"](spark, SF_DIR))
+def test_join_natural_key_has_partial_aggregation(spark):
+    plan = _physical(QUERIES["join_natural_key"](spark, SF_DIR))
     # map-side partial + final: two HashAggregate levels around one shuffle
     # (WholeStageCodegen spans only appear in the post-execution adaptive
     # plan, so codegen presence is asserted via the partial-agg markers)
@@ -105,7 +105,14 @@ def test_search_query_side_is_broadcast(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_no_partitionless_window_in_any_query(spark):
+@pytest.fixture(scope="module")
+def registry_plans(spark):
+    """Physical plan of every registry row, planned once for the
+    all-registry audits below."""
+    return {name: _physical(fn(spark, SF_DIR)) for name, fn in QUERIES.items()}
+
+
+def test_no_partitionless_window_in_any_query(registry_plans):
     """A Window with no partitionBy funnels ALL rows into one task (Spark
     warns 'Moving all data to a single partition') — fatal at 100 TB.
     Global top-k must be orderBy().limit() (TakeOrderedAndProject) and any
@@ -138,8 +145,7 @@ def test_no_partitionless_window_in_any_query(spark):
         return groups
 
     offenders = []
-    for name, fn in QUERIES.items():
-        plan = _physical(fn(spark, SF_DIR))
+    for name, plan in registry_plans.items():
         for line in plan.splitlines():
             idx = line.find("Window [")
             if idx < 0:
@@ -152,7 +158,7 @@ def test_no_partitionless_window_in_any_query(spark):
     assert not offenders, offenders
 
 
-def test_no_interpreted_hof_in_any_query(spark):
+def test_no_interpreted_hof_in_any_query(registry_plans):
     """Higher-order array expressions (transform/aggregate/zip_with/
     filter(lambda)) run on Spark's interpreted expression path — measured
     ~2.3x slower than codegen explode+agg on this host (BENCH.md probes),
@@ -160,8 +166,7 @@ def test_no_interpreted_hof_in_any_query(spark):
     lambdafunction() in ALL registry plans ('lambdafunction' is the
     unambiguous physical-plan marker for every HOF)."""
     offenders = []
-    for name, fn in QUERIES.items():
-        plan = _physical(fn(spark, SF_DIR))
+    for name, plan in registry_plans.items():
         if "lambdafunction" in plan:
             line = next(l for l in plan.splitlines() if "lambdafunction" in l)
             offenders.append((name, line.strip()[:120]))
