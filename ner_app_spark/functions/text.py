@@ -129,10 +129,12 @@ def split_sentences(text: str) -> list[str]:
 
 def extract_text(html_bytes: bytes) -> str:
     """Deterministic boilerplate strip. Plain (non-HTML) payloads are a
-    strict UTF-8 decode, matching the reference extractor exactly
-    (views.py:57). HTML payloads: all <p> bodies, entity-unescaped, joined
-    by blank lines — byte-identical to the authored text by construction."""
-    s = html_bytes.decode("utf-8")
+    UTF-8 decode, matching the reference extractor exactly on valid UTF-8
+    (views.py:57); invalid bytes decode to U+FFFD instead of raising, so
+    one malformed page cannot fail a whole job. HTML payloads: all <p>
+    bodies, entity-unescaped, joined by blank lines — byte-identical to
+    the authored text by construction."""
+    s = html_bytes.decode("utf-8", errors="replace")
     if not s.startswith("<html"):
         return s
     return "\n\n".join(html_mod.unescape(p) for p in _PARA_RE.findall(s))

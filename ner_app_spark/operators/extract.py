@@ -84,14 +84,17 @@ FUSED_SCHEMA = StructType(
 
 def extracted_text(pages: DataFrame) -> DataFrame:
     """(url, extracted, lang): boilerplate-stripped text, byte-identical
-    per url to the authored text (BASELINE.json invariant)."""
+    per url to the authored text (BASELINE.json invariant). A NULL
+    ``html`` extracts to ``""``, so one bad page cannot fail the job."""
 
     def run(batches) -> Iterator:
         from ..functions.text import extract_text
 
         for pdf in batches:
             out = pdf[["url", "lang"]].copy()
-            out["extracted"] = [extract_text(bytes(h)) for h in pdf["html"]]
+            out["extracted"] = [
+                "" if h is None else extract_text(bytes(h)) for h in pdf["html"]
+            ]
             yield out[["url", "extracted", "lang"]]
 
     return pages.select("url", "html", "lang").mapInPandas(run, schema=EXTRACTED_SCHEMA)

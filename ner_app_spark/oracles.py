@@ -593,7 +593,7 @@ FROM (
 def _kg_extracted_text_sql(n_pages: int) -> str:
     """q_kg_extracted_text replayed: the boilerplate strip rebuilt in SQL
     (functions/text.extract_text) — non-HTML payloads pass through as a
-    strict UTF-8 decode; HTML payloads take all (?s)<p>(.*?)</p> bodies,
+    UTF-8 decode; HTML payloads take all (?s)<p>(.*?)</p> bodies,
     joined by blank lines, entity-unescaped. The synth escape alphabet is
     exactly {&amp; &lt; &gt;} (html.escape(quote=False)), so the ordered
     replace chain (&lt;, &gt;, then &amp; last) reproduces html.unescape;

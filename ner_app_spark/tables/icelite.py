@@ -20,9 +20,10 @@ parquet files + JSON metadata:
     ``_COMMIT_RETRIES`` lost races;
   * **manifest file stats + scan pruning** — the manifest records per
     data file: record count, byte size, and per-column min/max/null
-    counts harvested from the parquet FOOTERS by a distributed job
-    (``mapInPandas`` over the file list — footer-only reads, no data
-    I/O, no driver-side footer loop). ``scan(filters=...)`` drops every
+    counts read from the parquet FOOTERS by the driver as it moves each
+    written file into place (footer-only reads, no data I/O, no Spark
+    job — Iceberg's writers likewise hand per-file metrics to the
+    driver that writes the manifest). ``scan(filters=...)`` drops every
     file whose stats cannot satisfy the filter before Spark ever plans
     the read. At 10^12 rows this is THE mechanism that turns a
     full-table scan into a handful of files — partition pruning as data
@@ -56,13 +57,14 @@ parquet files + JSON metadata:
 
 Deliberate simplifications vs the real spec, each declared: one JSON
 manifest per snapshot instead of a manifest-list tree (sharding the file
-list across manifest files is a pure fan-out of the same footer job);
+list across manifest files is a pure fan-out of the same entries);
 equality deletes only (no positional deletes — those need a writer that
 tracks row offsets); tags (named immutable refs, expiry-exempt — see
 :meth:`IceTable.tag`) but no writable branches. Metadata stays O(files)
-JSON — at a
-real deployment's file counts the manifest job's .collect() becomes a
-manifest-file write per task, which is exactly what Iceberg does.
+JSON, built on the driver from O(files) footer reads — at a real
+deployment's file counts each write task would return its files'
+metrics with its commit message instead, which is exactly what
+Iceberg does.
 
 Reference behavior reproduced: the reference app persists analysis
 results content-addressed and write-once (src/services/text_service.py:
@@ -82,6 +84,7 @@ from contextlib import suppress as contextlib_suppress
 from dataclasses import dataclass
 from hashlib import md5
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -240,92 +243,64 @@ def _coerce_literal(v, stat):
     return v
 
 
-def _footer_entries(spark: SparkSession, paths: list[str]) -> list[dict]:
-    """One manifest entry per data file, harvested from parquet footers by
-    a DISTRIBUTED job (footer-only I/O; ~kB per file regardless of data
-    size). Returns [{path, record_count, size_bytes, stats:{col:
-    {min,max,nulls}}}]. The .collect() is manifest metadata — O(files)
-    small dicts; at deployment file counts this becomes a per-task
-    manifest-shard write (see module docstring)."""
-    if not paths:
-        return []
-
-    def harvest(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        for b in batches:
-            rows = []
-            for p in b["path"]:
-                meta = pq.ParquetFile(p).metadata
-                ncols = meta.num_columns
-                agg: dict[str, dict] = {}
-                usable: dict[str, bool] = {}
-                for g in range(meta.num_row_groups):
-                    rg = meta.row_group(g)
-                    for i in range(ncols):
-                        col = rg.column(i)
-                        name = col.path_in_schema
-                        if "." in name:  # nested fields: not pruneable
-                            usable[name] = False
-                            continue
-                        st = col.statistics
-                        a = agg.setdefault(
-                            name, {"min": None, "max": None, "nulls": 0}
-                        )
-                        if st is None or not st.has_min_max:
-                            # a row group without stats poisons min/max
-                            # (but null counts may still be complete)
-                            if st is None or st.null_count is None:
-                                usable[name] = False
-                            else:
-                                a["nulls"] += st.null_count
-                                if st.num_values > 0:
-                                    usable[name] = False
-                                else:
-                                    # all-null row group: min/max stay
-                                    # None, which IS the stat ("no
-                                    # non-null values") — keep usable
-                                    usable.setdefault(name, True)
-                            continue
+def _footer_entry(path: str) -> dict:
+    """The manifest entry of one data file, read from its parquet footer
+    on the driver: {path, record_count, size_bytes, stats:{col:{min,max,
+    nulls}}}. Iceberg's write tasks hand per-file metrics to the driver,
+    which writes the manifest; here the driver already lists and moves
+    every file it commits (``_write_data``), so one footer read (~kB,
+    no data I/O) per file is the same O(files) work with no Spark job.
+    Nested and binary columns carry no stats (not pruneable); a column
+    with a row group lacking min/max gets none either, unless that row
+    group is all-null."""
+    meta = pq.ParquetFile(path).metadata
+    agg: dict[str, dict] = {}
+    usable: dict[str, bool] = {}
+    for g in range(meta.num_row_groups):
+        rg = meta.row_group(g)
+        for i in range(meta.num_columns):
+            col = rg.column(i)
+            name = col.path_in_schema
+            if "." in name:  # nested fields: not pruneable
+                usable[name] = False
+                continue
+            st = col.statistics
+            a = agg.setdefault(name, {"min": None, "max": None, "nulls": 0})
+            if st is None or not st.has_min_max:
+                # a row group without stats poisons min/max
+                # (but null counts may still be complete)
+                if st is None or st.null_count is None:
+                    usable[name] = False
+                else:
+                    a["nulls"] += st.null_count
+                    if st.num_values > 0:
+                        usable[name] = False
+                    else:
+                        # all-null row group: min/max stay None, which
+                        # IS the stat ("no non-null values") — keep usable
                         usable.setdefault(name, True)
-                        a["nulls"] += st.null_count or 0
-                        if st.num_values > 0:
-                            if a["min"] is None or st.min < a["min"]:
-                                a["min"] = st.min
-                            if a["max"] is None or st.max > a["max"]:
-                                a["max"] = st.max
-                stats = {}
-                for name, a in agg.items():
-                    if not usable.get(name, False):
-                        continue
-                    emin, emax = _enc_stat(a["min"]), _enc_stat(a["max"])
-                    if (emin is None) != (a["min"] is None):
-                        continue  # unencodable type (binary etc.)
-                    stats[name] = {
-                        "min": emin, "max": emax, "nulls": a["nulls"]
-                    }
-                rows.append(
-                    (p, meta.num_rows, os.path.getsize(p), json.dumps(stats))
-                )
-            yield pd.DataFrame(
-                rows, columns=["path", "record_count", "size_bytes", "stats"]
-            )
-
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-    out = pdf.repartition(min(len(paths), 32)).mapInPandas(
-        harvest,
-        schema="path string, record_count long, size_bytes long, stats string",
-    ).collect()
-    return [
-        {
-            "path": r["path"],
-            "record_count": r["record_count"],
-            "size_bytes": r["size_bytes"],
-            "stats": json.loads(r["stats"]),
-        }
-        for r in sorted(out, key=lambda r: r["path"])
-    ]
+                continue
+            usable.setdefault(name, True)
+            a["nulls"] += st.null_count or 0
+            if st.num_values > 0:
+                if a["min"] is None or st.min < a["min"]:
+                    a["min"] = st.min
+                if a["max"] is None or st.max > a["max"]:
+                    a["max"] = st.max
+    stats = {}
+    for name, a in agg.items():
+        if not usable.get(name, False):
+            continue
+        emin, emax = _enc_stat(a["min"]), _enc_stat(a["max"])
+        if (emin is None) != (a["min"] is None):
+            continue  # unencodable type (binary etc.)
+        stats[name] = {"min": emin, "max": emax, "nulls": a["nulls"]}
+    return {
+        "path": path,
+        "record_count": meta.num_rows,
+        "size_bytes": os.path.getsize(path),
+        "stats": stats,
+    }
 
 
 # ---------------------------------------------------------------- pruning
@@ -637,9 +612,7 @@ class IceTable:
         os.makedirs(t._meta_dir, exist_ok=True)
         os.makedirs(t._data_dir, exist_ok=True)
         spec = partition_spec or []
-        entries = t._write_data(
-            spark, df, spec, target_files, sort_cols=sort_order
-        )
+        entries = t._write_data(df, spec, target_files, sort_cols=sort_order)
         for e in entries:
             e["seq"] = 0
         entry = t._snap_entry(None, "create", entries, entries)
@@ -675,14 +648,14 @@ class IceTable:
 
     def _write_data(
         self,
-        spark: SparkSession,
         df: DataFrame,
         spec: list[Transform],
         target_files: int | None,
         sort_cols: list[str] | None = None,
     ) -> list[dict]:
         """Write immutable, uniquely-named data files clustered by the
-        partition transforms, then harvest their footer stats. The
+        partition transforms, then read each file's footer stats on the
+        driver as it moves into the data dir. The
         hidden ``_p_*`` columns are stored IN the files — their per-file
         min/max are the manifest's partition tuple. ``sort_cols`` is the
         table's write sort order (Iceberg SortOrder): within a partition
@@ -712,9 +685,9 @@ class IceTable:
             staged = staged.repartition(target_files)
         token = uuid.uuid4().hex[:12]
         tmp = os.path.join(self.path, f"_tmp-{token}")
+        entries = []
         try:
             staged.write.mode("overwrite").parquet(tmp)
-            paths = []
             for i, name in enumerate(
                 sorted(
                     f for f in os.listdir(tmp)
@@ -725,19 +698,18 @@ class IceTable:
                     self._data_dir, f"{token}-{i:05d}.parquet"
                 )
                 shutil.move(os.path.join(tmp, name), dst)
-                paths.append(dst)
+                e = _footer_entry(dst)
+                if e["record_count"]:
+                    entries.append(e)
+                else:
+                    # drop zero-record part files (an empty input
+                    # partition still writes one): they carry nothing,
+                    # and a streaming sink's empty triggers would
+                    # otherwise grow the manifest forever
+                    os.remove(dst)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-        entries = _footer_entries(spark, paths)
-        # drop zero-record part files (an empty input partition still
-        # writes one): they carry nothing, and a streaming sink's empty
-        # triggers would otherwise grow the manifest forever
-        keep = [e for e in entries if e["record_count"] > 0]
-        for e in entries:
-            if e["record_count"] == 0:
-                with contextlib_suppress(OSError):
-                    os.remove(e["path"])
-        return keep
+        return entries
 
     def append(
         self,
@@ -761,7 +733,7 @@ class IceTable:
         schema = StructType.fromJson(meta["schema_json"])
         aligned, new_schema = _align_for_append(df, schema)
         added = self._write_data(
-            spark, aligned, spec, target_files,
+            aligned, spec, target_files,
             sort_cols=meta.get("sort_order", []),
         )
 
@@ -795,7 +767,7 @@ class IceTable:
         meta = self._read_meta()
         spec = [Transform.from_json(d) for d in meta["partition_spec"]]
         added = self._write_data(
-            spark, df, spec, target_files,
+            df, spec, target_files,
             sort_cols=meta.get("sort_order", []),
         )
 
@@ -832,7 +804,7 @@ class IceTable:
         if missing:
             raise ValueError(f"delete key columns not in table: {missing}")
         written = self._write_data(
-            spark, keys_df.dropDuplicates(key_cols), spec=[], target_files=None
+            keys_df.dropDuplicates(key_cols), spec=[], target_files=None
         )
 
         def build(meta: dict) -> dict:
@@ -882,11 +854,10 @@ class IceTable:
         spec = [Transform.from_json(d) for d in meta["partition_spec"]]
         aligned, new_schema = _align_for_append(df, schema)
         added = self._write_data(
-            spark, aligned, spec, target_files,
+            aligned, spec, target_files,
             sort_cols=meta.get("sort_order", []),
         )
         keys_written = self._write_data(
-            spark,
             df.select(*key_cols).dropDuplicates(list(key_cols)),
             spec=[], target_files=None,
         )
@@ -973,7 +944,7 @@ class IceTable:
             1, -(-sum(e["size_bytes"] for e in inputs) // target_file_bytes)
         )
         rewritten = self._write_data(
-            spark, df,
+            df,
             [Transform.from_json(d) for d in meta["partition_spec"]],
             target_files=n_out,
             sort_cols=meta.get("sort_order", []),

@@ -14,8 +14,11 @@ import datetime as dt
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row, functions as F
+from pyspark.sql import types as T
 
 from ner_app_spark.tables.icelite import (
     CommitConflict,
@@ -357,6 +360,110 @@ def test_metadata_is_plain_json(spark, events, tmp_path):
     # footer stats carry per-column min/max/null counts
     assert "event_id" in entry["stats"]
     assert set(entry["stats"]["event_id"]) == {"min", "max", "nulls"}
+
+
+def test_append_launches_only_its_data_write_job(spark, events, tmp_path):
+    """The manifest is built on the driver from the written files'
+    footers: an append of an unpartitioned, unsorted frame runs the
+    parquet write and no other Spark job."""
+    t = IceTable.create(spark, str(tmp_path / "t"), events, target_files=2)
+    sc = spark.sparkContext
+    group = "icelite-append-probe"
+    try:
+        sc.setJobGroup(group, "icelite append")
+        t.append(spark, _events(spark, n=60))
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert len(jobs) == 1
+    assert t.scan(spark)[0].count() == 660
+
+
+def _enc(v):
+    """A min/max value in the manifest's tagged encoding."""
+    if v is None:
+        return None
+    if isinstance(v, dt.date):  # datetime is a date subclass
+        tag = "dt" if isinstance(v, dt.datetime) else "date"
+        return {"t": tag, "v": v.isoformat()}
+    tag = {bool: "bool", int: "int", float: "float", str: "str"}[type(v)]
+    return {"t": tag, "v": v}
+
+
+def _stats_from_data(path: str) -> dict:
+    """Manifest stats recomputed from a data file's rows, not its
+    footer: min/max/null count of every flat non-binary column."""
+    tbl = pq.read_table(path)
+    want = {}
+    for field in tbl.schema:
+        if pa.types.is_binary(field.type) or pa.types.is_nested(field.type):
+            continue
+        vals = tbl.column(field.name).to_pylist()
+        live = [v for v in vals if v is not None]
+        want[field.name] = {
+            "min": _enc(min(live, default=None)),
+            "max": _enc(max(live, default=None)),
+            "nulls": len(vals) - len(live),
+        }
+    return want
+
+
+def test_manifest_stats_equal_the_data(spark, tmp_path):
+    """Every manifest entry's record count, size and per-column stats
+    match the file's own rows; binary and nested columns carry no stats
+    and an all-null column has None min/max with its null count."""
+    schema = T.StructType([
+        T.StructField("s", T.StringType()),
+        T.StructField("n", T.LongType()),
+        T.StructField("x", T.DoubleType()),
+        T.StructField("flag", T.BooleanType()),
+        T.StructField("d", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("raw", T.BinaryType()),
+        T.StructField("nothing", T.StringType()),
+        T.StructField("pair", T.StructType([
+            T.StructField("a", T.LongType()), T.StructField("b", T.StringType()),
+        ])),
+    ])
+    rows = [
+        (
+            f"s{i % 17}" if i % 5 else None,
+            i * 3 - 50,
+            i / 7 if i % 3 else None,
+            i % 2 == 0,
+            dt.date(2024, 1, 1 + i % 20),
+            dt.datetime(2024, 3, 1 + i % 6, i % 24, i % 60),
+            bytes([i % 256, 7]),
+            None,
+            (i, f"x{i}"),
+        )
+        for i in range(300)
+    ]
+    conf = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(conf)
+    # INT96 (Spark's default) carries no footer statistics; micros do
+    spark.conf.set(conf, "TIMESTAMP_MICROS")
+    try:
+        t = IceTable.create(
+            spark, str(tmp_path / "t"), spark.createDataFrame(rows, schema),
+            target_files=3,
+        )
+    finally:
+        spark.conf.set(conf, prev)
+    entries = t._read_manifest(t.current_snapshot_id())
+    assert len(entries) == 3
+    assert sum(e["record_count"] for e in entries) == 300
+    for e in entries:
+        assert e["record_count"] == pq.read_metadata(e["path"]).num_rows
+        assert e["size_bytes"] == os.path.getsize(e["path"])
+        assert e["stats"] == _stats_from_data(e["path"])
+        assert set(e["stats"]) == {"s", "n", "x", "flag", "d", "ts", "nothing"}
+        assert e["stats"]["nothing"] == {
+            "min": None, "max": None, "nulls": e["record_count"],
+        }
+        assert e["stats"]["ts"]["min"]["t"] == "dt"
 
 
 # ----------------------------------------------------- table maintenance

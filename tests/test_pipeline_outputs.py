@@ -7,10 +7,13 @@ recomputing."""
 from __future__ import annotations
 
 import copy
+import datetime
 import os
 from urllib.parse import urlparse
 
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ner_app_spark import oracle
 from ner_app_spark.operators import components
@@ -190,6 +193,32 @@ def test_duplicate_urls_merge_into_one_graph_per_url(spark, pages, tmp_path):
         assert _rows(out.phrases) == sorted(want_phrases)
         assert _rows(out.triples) == sorted(want_triples)
         _assert_minted_graph(spark, out, str(tmp_path / "kg"))
+    finally:
+        out.cleanup()
+
+
+def test_dirty_pages_do_not_fail_the_run(spark, pages, direct):
+    """A NULL html extracts to "" and invalid UTF-8 decodes with
+    replacement characters: the run completes, counts every page, and the
+    good pages' phrases are those of a run without the dirty ones."""
+    ts = datetime.datetime(2024, 1, 1)
+    dirty = spark.createDataFrame(
+        [
+            ("https://dirty.example/null", ts, None, "", "ru"),
+            ("https://dirty.example/plain", ts, b"\xff\xfe \xd0", "", "ru"),
+            ("https://dirty.example/html", ts,
+             b"<html><p>\xd0\x9c\xd0 \xc3</p></html>", "", "ru"),
+        ],
+        StructType([StructField(f.name, f.dataType) for f in pages.schema]),
+    )
+    out = run_pipeline(spark, pages.unionByName(dirty), n_parts=4)
+    try:
+        assert pipeline_counters(out)["documents"] == 33
+        texts = dict(out.extracted.select("url", "extracted").collect())
+        assert texts["https://dirty.example/null"] == ""
+        assert texts["https://dirty.example/plain"] == "\ufffd\ufffd \ufffd"
+        good = out.phrases.filter(~F.col("url").startswith("https://dirty."))
+        assert sorted(good.collect()) == sorted(direct.phrases.collect())
     finally:
         out.cleanup()
 
